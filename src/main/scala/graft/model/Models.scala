@@ -85,14 +85,15 @@ final case class EngineConfig(
 object Schemas {
   /** Wire schema of a VideoFrame JSON message (Jackson field names,
     * reference serialization/VideoFrameDeserializationSchema.java:13-31).
-    * `frameData` arrives base64-encoded (Jackson byte[] default);
-    * decode with unbase64 after from_json.
+    * `frameData` arrives base64-encoded (Jackson byte[] default) and is
+    * declared binary, so `from_json` decodes it inside the parse
+    * (Jackson `getBinaryValue`), with no intermediate string.
     */
   val frameWire: StructType = StructType(Seq(
     StructField("streamId", StringType),
     StructField("frameId", LongType),
     StructField("timestamp", LongType),
-    StructField("frameData", StringType), // base64 on the wire
+    StructField("frameData", BinaryType), // base64 on the wire
     StructField("frameSequence", IntegerType),
     StructField("metadata", StructType(Seq(
       StructField("width", IntegerType),

@@ -9,9 +9,14 @@ import org.apache.spark.sql.functions._
   * serialization, serialization/VideoFrameDeserializationSchema.java:13-31;
   * sample message README.md:174-186).
   *
-  * Decode is pure Catalyst (`from_json` + `unbase64`) — stays inside
-  * whole-stage codegen, no per-row JVM object churn beyond the typed
-  * boundary the caller asks for.
+  * Decode is pure Catalyst: one `from_json` whose schema declares the
+  * payload binary, so Jackson base64-decodes it while parsing (no
+  * intermediate `String` or `UTF8String` of the payload). No per-row
+  * JVM object churn beyond the typed boundary the caller asks for.
+  *
+  * A payload Jackson cannot decode as base64 (say `"abc"`, or
+  * `"!!!!"`) reads as a null `frameData` with the other fields kept.
+  * Jackson skips JSON-escaped line breaks inside it.
   */
 object FrameCodec {
 
@@ -22,13 +27,7 @@ object FrameCodec {
     import s.implicits._
     raw
       .select(from_json(col("value").cast("string"), Schemas.frameWire).as("f"))
-      .select(
-        col("f.streamId").as("streamId"),
-        col("f.frameId").as("frameId"),
-        col("f.timestamp").as("timestamp"),
-        unbase64(col("f.frameData")).as("frameData"),
-        col("f.frameSequence").as("frameSequence"),
-        col("f.metadata").as("metadata"))
+      .select(col("f.*"))
       .as[VideoFrame]
   }
 

@@ -29,8 +29,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * frame buffer (the reference buffers raw JPEGs only to feed ffmpeg,
   * which is stubbed here; a real encode sink would write frames to
   * object storage per micro-batch and compose manifests instead of
-  * holding them in state). The only shuffle is the groupByKey exchange
-  * on streamId, identical to the reference's keyBy.
+  * holding them in state). The only shuffle is the hash exchange on
+  * the streamId column, identical to the reference's keyBy. Grouping
+  * on the column, not on a `VideoFrame => String` function, keeps the
+  * frames in Spark's row format up to the fold: no map-side object
+  * round trip just to read the key.
   */
 object VideoPipeline {
 
@@ -50,16 +53,20 @@ object VideoPipeline {
   val initialState: StreamState =
     StreamState(0L, null, -1L, -1L, 0, 0L, 0L, 0L)
 
+  /** Built once per JVM: `Encoders.product` runs Scala reflection. */
+  private lazy val stateEncoder = Encoders.product[StreamState]
+
   /** 32-bin normalized byte histogram (the deterministic stand-in for
     * the reference's stubbed OpenCV histogram, util/ImageUtils.java:80-84).
     */
   def signature(bytes: Array[Byte]): Array[Double] = {
     val h = new Array[Double](32)
     if (bytes == null || bytes.isEmpty) return h
+    val counts = new Array[Int](32)
     var i = 0
-    while (i < bytes.length) { h((bytes(i) & 0xff) >> 3) += 1.0; i += 1 }
+    while (i < bytes.length) { counts((bytes(i) & 0xff) >> 3) += 1; i += 1 }
     var j = 0
-    while (j < 32) { h(j) /= bytes.length; j += 1 }
+    while (j < 32) { h(j) = counts(j).toDouble / bytes.length; j += 1 }
     h
   }
 
@@ -157,7 +164,7 @@ object VideoPipeline {
       detector: VideoFrame => Seq[Detection] = null): Dataset[PipelineEvent] = {
     import frames.sparkSession.implicits._
     val det = if (detector == null) defaultDetector(cfg) else detector
-    frames.groupByKey(_.streamId)
+    frames.groupBy(col("streamId")).as[String, VideoFrame]
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(groupFn(cfg, det))
   }
@@ -254,7 +261,7 @@ object VideoPipeline {
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       state = getHandle.getValueState[StreamState]("pipelineState",
-        Encoders.product[StreamState], TTLConfig.NONE)
+        stateEncoder, TTLConfig.NONE)
 
     override def handleInputRows(key: String, rows: Iterator[VideoFrame],
         timerValues: TimerValues): Iterator[PipelineEvent] = {
@@ -274,7 +281,7 @@ object VideoPipeline {
       detector: VideoFrame => Seq[Detection] = null): Dataset[PipelineEvent] = {
     import frames.sparkSession.implicits._
     val det = if (detector == null) defaultDetector(cfg) else detector
-    frames.groupByKey(_.streamId)
+    frames.groupBy(col("streamId")).as[String, VideoFrame]
       .transformWithState(new VideoStatefulProcessor(cfg, det),
         TimeMode.None(), OutputMode.Append())
   }

@@ -3,8 +3,9 @@ package graft
 import graft.model._
 import graft.sources.FrameCodec
 import graft.streaming.{FrameGenerator, VideoPipeline}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Stateful-core semantics (pure fold + streaming e2e): segment
@@ -203,54 +204,101 @@ class VideoPipelineSpec extends AnyFunSuite {
     }
   }
 
+  /** Runs the first half of a two-camera stream through `first`, stops
+    * the query, and resumes from the same RocksDB checkpoint with
+    * `processTWS` on the second half. Returns the events of both runs
+    * and those of one uninterrupted batch run, as comparable keys.
+    */
+  private def twsResume(first: Dataset[VideoFrame] => Dataset[PipelineEvent])
+      : (Seq[String], Seq[String]) = {
+    // Dedicated session: the provider class is session-level conf.
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    import s2.implicits._
+    implicit val s: SparkSession = s2
+    val base = java.nio.file.Files.createTempDirectory("graft_tws_ckpt_").toString
+    val inDir = s"$base/in"; val ckpt = s"$base/ckpt"; val outDir = s"$base/out"
+    new java.io.File(inDir).mkdirs()
+
+    val frames = FrameGenerator.frames(streams = 2, fps = 5, durationSec = 500)
+    val (b1, b2) = frames.partition(_.timestamp < FrameGenerator.BASE_TS + 250000)
+    def writeBatch(fs: Seq[VideoFrame]): Unit =
+      FrameCodec.encode(s2.createDataset(fs)).select("value")
+        .coalesce(1).write.mode("append").text(inDir)
+
+    def startQuery(op: Dataset[VideoFrame] => Dataset[PipelineEvent]) = {
+      val src = FrameCodec.decode(
+        s2.readStream.text(inDir).select($"value".cast("binary").as("value")))
+      op(src).writeStream
+        .option("checkpointLocation", ckpt)
+        .format("parquet").option("path", outDir)
+        .outputMode("append").start()
+    }
+
+    writeBatch(b1)
+    val q1 = startQuery(first)
+    q1.processAllAvailable(); q1.stop() // "kill" mid-stream
+    writeBatch(b2)
+    // fresh query, same checkpoint → state restored
+    val q2 = startQuery(VideoPipeline.processTWS(_, cfg))
+    q2.processAllAvailable(); q2.stop()
+
+    val got = s2.read.parquet(outDir).as[PipelineEvent].collect()
+    val batch = VideoPipeline.process(s2.createDataset(frames), cfg).collect()
+    assert(got.count(_.kind == "segment") > 0)
+    def key(e: PipelineEvent) = (e.kind, e.streamId, e.frameId, e.timestamp,
+      e.detections.map(_.objectClass).mkString(","),
+      e.segment.map(_.startTime).getOrElse(-1L)).toString
+    (got.map(key).sorted.toSeq, batch.map(key).sorted.toSeq)
+  }
+
   test("transformWithState checkpoint recovery: kill mid-stream, resume equals uninterrupted run") {
     // The Spark-4 StatefulProcessor path (SURVEY §2 row D's stated
     // target) must restore its ValueState from the RocksDB-provider
     // checkpoint across a query restart — the reference's exactly-once
-    // state contract (VideoProcessFunction.java:154-191). Dedicated
-    // session: the provider class is session-level conf.
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    locally {
-      import s2.implicits._
-      implicit val s: SparkSession = s2
-      val base = java.nio.file.Files.createTempDirectory("graft_tws_ckpt_").toString
-      val inDir = s"$base/in"; val ckpt = s"$base/ckpt"; val outDir = s"$base/out"
-      new java.io.File(inDir).mkdirs()
+    // state contract (VideoProcessFunction.java:154-191). Open-segment
+    // buffers carry through the checkpoint, no duplicates, no loss.
+    val (got, expected) = twsResume(VideoPipeline.processTWS(_, cfg))
+    assert(got === expected)
+  }
 
-      val frames = FrameGenerator.frames(streams = 2, fps = 5, durationSec = 500)
-      val (b1, b2) = frames.partition(_.timestamp < FrameGenerator.BASE_TS + 250000)
-      def writeBatch(fs: Seq[VideoFrame]): Unit =
-        FrameCodec.encode(s2.createDataset(fs)).select("value")
-          .coalesce(1).write.mode("append").text(inDir)
-
-      def startQuery() = {
-        val src = FrameCodec.decode(
-          s2.readStream.text(inDir).select($"value".cast("binary").as("value")))
-        VideoPipeline.processTWS(src, cfg).writeStream
-          .option("checkpointLocation", ckpt)
-          .format("parquet").option("path", outDir)
-          .outputMode("append").start()
-      }
-
-      writeBatch(b1)
-      val q1 = startQuery()
-      q1.processAllAvailable(); q1.stop() // "kill" mid-stream
-      writeBatch(b2)
-      val q2 = startQuery() // fresh query, same checkpoint → state restored
-      q2.processAllAvailable(); q2.stop()
-
-      val got = s2.read.parquet(outDir).as[PipelineEvent].collect()
-      val batch = VideoPipeline.process(s2.createDataset(frames), cfg).collect()
-      def key(e: PipelineEvent) = (e.kind, e.streamId, e.frameId, e.timestamp,
-        e.detections.map(_.objectClass).mkString(","),
-        e.segment.map(_.startTime).getOrElse(-1L)).toString
-      // exactly-once across the restart: open-segment buffers carried
-      // through the checkpoint, no duplicates, no loss
-      assert(got.map(key).sorted.toSeq === batch.map(key).sorted.toSeq)
-      assert(got.count(_.kind == "segment") > 0)
+  test("transformWithState resumes a checkpoint written by the groupByKey(_.streamId) shape") {
+    // Checkpoints written while processTWS keyed with a typed function
+    // (an AppendColumns key column) must resume under the column-keyed
+    // shape: same exchange, same key hash, same key and state encoding.
+    val (got, expected) = twsResume { frames =>
+      import frames.sparkSession.implicits._
+      frames.groupByKey(_.streamId).transformWithState(
+        new VideoPipeline.VideoStatefulProcessor(cfg,
+          VideoPipeline.defaultDetector(cfg)),
+        TimeMode.None(), OutputMode.Append())
     }
+    assert(got === expected)
+  }
+
+  test("signature counts in ints yet stays bit-identical to the summing loop") {
+    // Reference: += 1.0 per byte, then divide each bin. Summing 1.0 n
+    // times is exact for n < 2^53, so both agree to the bit.
+    def summingLoop(bytes: Array[Byte]): Array[Double] = {
+      val h = new Array[Double](32)
+      if (bytes == null || bytes.isEmpty) return h
+      var i = 0
+      while (i < bytes.length) { h((bytes(i) & 0xff) >> 3) += 1.0; i += 1 }
+      var j = 0
+      while (j < 32) { h(j) /= bytes.length; j += 1 }
+      h
+    }
+    def bits(h: Array[Double]) = h.toSeq.map(java.lang.Double.doubleToRawLongBits)
+    val rnd = new scala.util.Random(7)
+    val payloads = Seq[Array[Byte]](null, Array.emptyByteArray,
+      FrameGenerator.frameBytes(3, 1)) ++
+      Seq(1, 2, 3, 31, 1000, 16384, 100003).map { n =>
+        val b = new Array[Byte](n); rnd.nextBytes(b); b
+      }
+    for (p <- payloads)
+      assert(bits(VideoPipeline.signature(p)) === bits(summingLoop(p)),
+        s"payload of ${Option(p).map(_.length)} bytes")
   }
 
   test("watermarked segment summaries: windows close in append mode, late frames drop") {
