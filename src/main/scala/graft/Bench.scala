@@ -123,43 +123,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val tWall0 = System.nanoTime()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // session warmup (JVM/codegen/scheduler/parquet-reader init), not
-    // query work — keeps the first timed query from absorbing one-time
-    // costs. Warms the parquet reader on the smallest SIBLING sf dir
-    // of the bench dir when one exists (so the warmup never touches
-    // the bench data); falls back to the bench dir's own smallest file.
-    spark.range(1000).selectExpr("sum(id)").collect()
-    val warmDir = {
-      val sf = new java.io.File(sfDir)
-      val siblings = Option(sf.getParentFile)
-        .flatMap(p => Option(p.listFiles())) // listFiles() is null on unreadable dirs
-        .getOrElse(Array.empty[java.io.File])
-        .filter(d => d.isDirectory && d.getName != sf.getName &&
-          new java.io.File(d, "region.parquet").exists())
-      if (siblings.nonEmpty) siblings.minBy(d =>
-        new java.io.File(d, "region.parquet").length()).getPath
-      else sfDir
-    }
-    try spark.read.parquet(s"$warmDir/region.parquet").count()
-    catch { case _: Throwable => () }
-
-    def jsonEscape(s: String): String =
-      s.flatMap {
-        case '"'           => "\\\""
-        case '\\'          => "\\\\"
-        case '\n'          => "\\n"
-        case '\r'          => "\\r"
-        case '\t'          => "\\t"
-        case c if c < ' '  => f"\\u${c.toInt}%04x"
-        case c             => c.toString
-      }
+    val spark = Harness.start()
+    Harness.warmUp(spark, sfDir)
 
     // Per-query clean reference times (warm min-of-2 measured on an idle
     // box, checked in as bench_ref.json at repo root). Flat {"name":sec}
@@ -177,20 +142,7 @@ object Bench {
 
     var timedSum = 0.0
     def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      // Force execution through the noop DataSourceV2 sink, NOT .count():
-      // count() is rewritten to Aggregate[count(1)], after which
-      // ColumnPruning drops deterministic per-row projections and
-      // EliminateSorts drops orderBy — narrow scan→project queries would
-      // time only the scan. The noop sink consumes every output row/column,
-      // so the timed pass executes exactly the work a real consumer would.
-      // clearCache in finally: queries persist() intermediate signature
-      // tables, and a query that THROWS mid-action must not leak its
-      // cached blocks into the next query's timed passes. Clearing per
-      // pass also keeps every timed pass an honest full recompute.
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      finally spark.catalog.clearCache()
-      val sec = (System.nanoTime() - t0) / 1e9
+      val sec = Harness.timedPass(spark)(fn(spark, sfDir))
       timedSum += sec
       sec
     }
@@ -222,7 +174,7 @@ object Bench {
         timings += name -> (cold, warms.min, warms.max / warms.min, warms.size)
       } catch {
         case e: Throwable =>
-          errors += name -> jsonEscape(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(300)}")
+          errors += name -> Harness.jsonEscape(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(300)}")
       }
     }
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,6 +9,9 @@ object Verify {
     val (sfDir, outDir, nameFilter) = args match {
       case Array(sf, out)    => (sf, out, Seq.empty[String])
       case Array(sf, out, f) => (sf, out, f.split(",").toSeq)
+      case _ =>
+        System.err.println("usage: graft.Verify <sfDir> <outDir> [namePrefix1,namePrefix2]")
+        sys.exit(2)
     }
     // Repoint the oracle side-file base BESIDE our outDir before any
     // query runs: the frames/media dumps and the q145 pair store then
@@ -26,7 +28,6 @@ object Verify {
     val dumpDir = s"${outAbs}_dumps"
     graft.operators.OracleDump.baseDir = dumpDir
     val sfName = new java.io.File(sfDir).getName
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SPARK_GRAFT_AQE sweeps the adaptive-execution axis (Spark 4
     // defaults AQE + skew-join ON, so the unset default already runs
     // adaptively):
@@ -40,11 +41,8 @@ object Verify {
     //             self-join, and the cached-plan shapes).
     // Results must be identical across all three — the verify-skill
     // parity gate sweeps them.
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val builder = Harness.builder()
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
     sys.env.get("SPARK_GRAFT_AQE") match {
       case Some("0") =>
         builder.config("spark.sql.adaptive.enabled", "false")
@@ -58,8 +56,7 @@ object Verify {
           .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1024")
       case _ => ()
     }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.start(builder)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) =>
@@ -81,18 +78,7 @@ object Verify {
       System.err.println(s"[verify] pair-store publish failed: ${e.getMessage}")
     }
 
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    def q(s: String): String = "\"" + Harness.jsonEscape(s) + "\""
     // resolve the dump-path placeholders against this run's outDir —
     // written AFTER the queries (so every referenced dump exists)
     val json = SparkEntry.oracleSql

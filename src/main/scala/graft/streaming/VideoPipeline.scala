@@ -158,6 +158,17 @@ object VideoPipeline {
     * state across micro-batches. Within a batch frames are sorted by
     * event time; across batches arrival order rules (the reference has
     * no watermarks either — VideoStreamProcessingJob.java:61).
+    *
+    * Stays on flatMapGroupsWithState although Spark 4.1 also runs
+    * [[processTWS]] on a batch Dataset, for two reasons. Batch
+    * transformWithState fails with CANNOT_LOAD_STATE_STORE until the
+    * session has touched `spark.streams` (the StateStoreCoordinator is
+    * started there), and batch callers (q20–q22, Verify, Bench) start
+    * no stream. And it costs more per task: its `init` resolves the
+    * state encoder and generates projections in every task: q20 in
+    * vbench batch_queries (local[4]) ran 0.70–0.75 s on this path and
+    * 0.86–1.01 s on transformWithState, 0.7–0.8 task-seconds against
+    * 1.5–1.8.
     */
   def process(frames: Dataset[VideoFrame],
       cfg: EngineConfig = EngineConfig(),
@@ -251,8 +262,8 @@ object VideoPipeline {
     * stated target). Differences from flatMapGroupsWithState: typed
     * named state handles (multiple states, TTL, timers available) and
     * a state store contract that supports the RocksDB provider's
-    * changelog checkpointing. Streaming-only (the classic API remains
-    * the batch path).
+    * changelog checkpointing. [[process]] says why the batch path stays
+    * on flatMapGroupsWithState.
     */
   class VideoStatefulProcessor(cfg: EngineConfig,
       detector: VideoFrame => Seq[Detection])
@@ -273,8 +284,9 @@ object VideoPipeline {
     }
   }
 
-  /** [[process]] via transformWithState (streaming queries only; needs
-    * the RocksDB state store provider for production checkpointing).
+  /** [[process]] via transformWithState. Streaming queries need the
+    * RocksDB state store provider; a batch Dataset runs too, once the
+    * session has touched `spark.streams`.
     */
   def processTWS(frames: Dataset[VideoFrame],
       cfg: EngineConfig = EngineConfig(),

@@ -63,6 +63,12 @@ object GraftSqlBridge {
     out
   }
 
+  /** Waits until every posted listener event is delivered
+    * (`SparkContext.listenerBus` is `private[spark]`).
+    */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty(60000L)
+
   /** True iff the session's SQL cache registry has no entries. */
   def sqlCacheIsEmpty(spark: SparkSession): Boolean =
     spark.asInstanceOf[classic.SparkSession]

@@ -5,7 +5,7 @@ import graft.sources.FrameCodec
 import graft.streaming.{FrameGenerator, VideoPipeline}
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, TimeMode}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Stateful-core semantics (pure fold + streaming e2e): segment
@@ -275,6 +275,42 @@ class VideoPipelineSpec extends AnyFunSuite {
         TimeMode.None(), OutputMode.Append())
     }
     assert(got === expected)
+  }
+
+  test("state holds one row per stream, not per frame, on both stateful paths") {
+    // The fold keeps only StreamState per key (open segments are
+    // summaries, not buffered frames), so state is O(streams) however
+    // many frames and micro-batches went through.
+    val streams = 3
+    val frames = FrameGenerator.frames(streams = streams, fps = 5, durationSec = 180)
+    val batches = frames.groupBy(f => (f.timestamp - FrameGenerator.BASE_TS) / 60000)
+      .toSeq.sortBy(_._1).map(_._2)
+    assert(batches.size == 3)
+    def rowsAfterBatches(mem: MemoryStream[VideoFrame], q: StreamingQuery): Long =
+      try {
+        batches.foreach { b => mem.addData(b); q.processAllAvailable() }
+        q.lastProgress.stateOperators(0).numRowsTotal
+      } finally q.stop()
+
+    val base = java.nio.file.Files.createTempDirectory("graft_state_rows_").toString
+    val viaRunStreaming = {
+      import spark.implicits._
+      val mem = MemoryStream[VideoFrame](spark)
+      rowsAfterBatches(mem, VideoPipeline.runStreaming(mem.toDS(),
+        s"$base/out", s"$base/ckpt", cfg))
+    }
+    // Dedicated session: the provider class is session-level conf.
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val viaTWS = {
+      import s2.implicits._
+      val mem = MemoryStream[VideoFrame](s2)
+      rowsAfterBatches(mem, VideoPipeline.processTWS(mem.toDS(), cfg).writeStream
+        .format("memory").queryName("tws_state_rows").outputMode("append").start())
+    }
+    assert(viaRunStreaming === streams)
+    assert(viaTWS === streams)
   }
 
   test("signature counts in ints yet stays bit-identical to the summing loop") {
