@@ -130,7 +130,7 @@ object Dev {
           time(s"hist$n cumsum single-partition")(
             hist.withColumn("cum", sum(col("c")).over(Window.orderBy(col("v")))))
           time(s"hist$n cumsum two-pass")(plans.PartitionedPrefix.cumulative(
-            hist, "v", sums = Seq("c" -> "cum"), cache = false))
+            hist, "v", sums = Seq("c" -> "cum")))
         }
     } finally spark.sparkContext.removeSparkListener(counters)
   }

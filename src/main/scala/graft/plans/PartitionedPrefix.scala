@@ -87,16 +87,13 @@ object PartitionedPrefix {
     * consumers — an `autoRelease` persist measured ~0.2 s/task of
     * pure InMemoryRelation build overhead on the bench's tiny frames
     * and would hold histogram-sized executor memory at scale for
-    * nothing the exchange files don't already provide. `cache = true`
-    * remains for callers whose input is NOT exchange-terminated.
+    * nothing the exchange files don't already provide.
     */
   def cumulative(df: DataFrame, key: String, desc: Boolean = false,
       sums: Seq[(String, String)] = Nil,
-      minExcl: Seq[(String, String)] = Nil,
-      cache: Boolean = false): DataFrame = {
+      minExcl: Seq[(String, String)] = Nil): DataFrame = {
     require(sums.nonEmpty || minExcl.nonEmpty)
-    val h = if (cache) CacheLifecycle.autoRelease(df) else df
-    val withB = h.withColumn("__b", bucketOf(key))
+    val withB = df.withColumn("__b", bucketOf(key))
     val pAggs = sums.map { case (v, o) => sum(col(v)).as(s"__ps_$o") } ++
       minExcl.map { case (v, o) => min(col(v)).as(s"__pm_$o") }
     val partials = withB.groupBy(col("__b")).agg(pAggs.head, pAggs.tail: _*)

@@ -2,9 +2,9 @@ package graft.streaming
 
 import graft.functions.DetectionKernels
 import graft.model._
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** The stateful core of the engine — the Spark re-expression of the
   * reference's keyed process function (function/VideoProcessFunction
@@ -52,9 +52,6 @@ object VideoPipeline {
 
   val initialState: StreamState =
     StreamState(0L, null, -1L, -1L, 0, 0L, 0L, 0L)
-
-  /** Built once per JVM: `Encoders.product` runs Scala reflection. */
-  private lazy val stateEncoder = Encoders.product[StreamState]
 
   /** 32-bin normalized byte histogram (the deterministic stand-in for
     * the reference's stubbed OpenCV histogram, util/ImageUtils.java:80-84).
@@ -143,7 +140,10 @@ object VideoPipeline {
       if (f.metadata != null) f.metadata.height else 1080,
       cfg.confidenceThreshold.toFloat)
 
-  private def groupFn(cfg: EngineConfig, detector: VideoFrame => Seq[Detection])(
+  /** The per-group step of [[process]]. Visible in `graft` so specs
+    * can rebuild older checkpoint shapes around the same function.
+    */
+  private[graft] def groupFn(cfg: EngineConfig, detector: VideoFrame => Seq[Detection])(
       streamId: String, it: Iterator[VideoFrame],
       gs: GroupState[StreamState]): Iterator[PipelineEvent] = {
     val sorted = it.toSeq.sortBy(f => (f.timestamp, f.frameId))
@@ -153,22 +153,27 @@ object VideoPipeline {
     events.iterator
   }
 
-  /** Streaming (or batch — the API works on both) stateful operator:
-    * one exchange on streamId, then the per-key fold with persistent
-    * state across micro-batches. Within a batch frames are sorted by
-    * event time; across batches arrival order rules (the reference has
-    * no watermarks either — VideoStreamProcessingJob.java:61).
+  /** The one stateful operator of the fold, for batch (q20–q22,
+    * Verify, Bench) and streaming ([[runStreaming]], the backfill)
+    * alike: one exchange on streamId, then the per-key fold with
+    * persistent state across micro-batches. Within a batch frames are
+    * sorted by event time; across batches arrival order rules (the
+    * reference has no watermarks either — VideoStreamProcessingJob
+    * .java:61).
     *
-    * Stays on flatMapGroupsWithState although Spark 4.1 also runs
-    * [[processTWS]] on a batch Dataset, for two reasons. Batch
-    * transformWithState fails with CANNOT_LOAD_STATE_STORE until the
-    * session has touched `spark.streams` (the StateStoreCoordinator is
-    * started there), and batch callers (q20–q22, Verify, Bench) start
-    * no stream. And it costs more per task: its `init` resolves the
-    * state encoder and generates projections in every task: q20 in
-    * vbench batch_queries (local[4]) ran 0.70–0.75 s on this path and
-    * 0.86–1.01 s on transformWithState, 0.7–0.8 task-seconds against
-    * 1.5–1.8.
+    * flatMapGroupsWithState, like the engine's other stateful
+    * operators, rather than transformWithState (TWS). On a batch
+    * Dataset Spark plans it as a plain MapGroupsExec with no state
+    * store. Batch TWS opens one per task (and fails with
+    * CANNOT_LOAD_STATE_STORE until the session has touched
+    * `spark.streams`), and its `init` resolves the state encoder and
+    * generates projections in every task. In vbench (local[4]) batch
+    * TWS took q20 from 0.74–0.84 to 1.50–1.83 task-seconds and
+    * batch_queries `warm_cpu_s` from 8.48 to 8.72 s (median of 4
+    * pairs, worse in 3). Streaming the backfill through this operator
+    * instead of TWS on RocksDB was flat: `warm_cpu_s` median 2.295 →
+    * 2.325 s over 10 pairs, 5 won, inside the TWS runs' quartiles of
+    * 2.26–2.41 s.
     */
   def process(frames: Dataset[VideoFrame],
       cfg: EngineConfig = EngineConfig(),
@@ -257,46 +262,14 @@ object VideoPipeline {
       .as[VideoFrame]
   }
 
-  /** Spark 4 `transformWithState` form of [[process]] — the same pure
-    * fold behind the new StatefulProcessor API (SURVEY.md §7.1's
-    * stated target). Differences from flatMapGroupsWithState: typed
-    * named state handles (multiple states, TTL, timers available) and
-    * a state store contract that supports the RocksDB provider's
-    * changelog checkpointing. [[process]] says why the batch path stays
-    * on flatMapGroupsWithState.
-    */
-  class VideoStatefulProcessor(cfg: EngineConfig,
-      detector: VideoFrame => Seq[Detection])
-      extends StatefulProcessor[String, VideoFrame, PipelineEvent] {
-    @transient private var state: ValueState[StreamState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[StreamState]("pipelineState",
-        stateEncoder, TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[VideoFrame],
-        timerValues: TimerValues): Iterator[PipelineEvent] = {
-      val sorted = rows.toSeq.sortBy(f => (f.timestamp, f.frameId))
-      val st = if (state.exists()) state.get() else initialState
-      val (events, next) = processFrames(key, sorted, st, cfg, detector)
-      state.update(next)
-      events.iterator
-    }
-  }
-
-  /** [[process]] via transformWithState. Streaming queries need the
-    * RocksDB state store provider; a batch Dataset runs too, once the
-    * session has touched `spark.streams`.
+  /** Forwards to [[process]]. Kept only because the streaming
+    * benchmark's backfill (`vbench/src/vbench/Streams.scala`) calls the
+    * fold by this name; it goes when that call moves to `process`.
     */
   def processTWS(frames: Dataset[VideoFrame],
       cfg: EngineConfig = EngineConfig(),
-      detector: VideoFrame => Seq[Detection] = null): Dataset[PipelineEvent] = {
-    import frames.sparkSession.implicits._
-    val det = if (detector == null) defaultDetector(cfg) else detector
-    frames.groupBy(col("streamId")).as[String, VideoFrame]
-      .transformWithState(new VideoStatefulProcessor(cfg, det),
-        TimeMode.None(), OutputMode.Append())
-  }
+      detector: VideoFrame => Seq[Detection] = null): Dataset[PipelineEvent] =
+    process(frames, cfg, detector)
 
   /** Streaming twin of the tumbling segmentation (q10) as a
     * watermarked windowed aggregation: event-time 3-minute windows per

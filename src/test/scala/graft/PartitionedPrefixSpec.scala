@@ -84,7 +84,7 @@ class PartitionedPrefixSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val df = Seq((5L, 2L), (9L, 3L)).toDF("v", "c")
     val out = PartitionedPrefix.cumulative(df, "v",
-      sums = Seq("c" -> "cum"), cache = false)
+      sums = Seq("c" -> "cum"))
     assert(out.columns.toSeq == Seq("v", "c", "cum"))
     assert(out.schema("cum").dataType.typeName == "long")
     assert(out.collect().map(r => (r.getLong(0), r.getLong(2))).sorted

@@ -4,14 +4,22 @@ import graft.model._
 import graft.sources.FrameCodec
 import graft.streaming.{FrameGenerator, VideoPipeline}
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, TimeMode}
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{MapGroupsExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.streaming.operators.stateful.StatefulOperator
+import org.apache.spark.sql.execution.streaming.operators.stateful.flatmapgroupswithstate.FlatMapGroupsWithStateExec
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
+import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Stateful-core semantics (pure fold + streaming e2e): segment
   * boundary at exactly segmentDuration (ref VideoSegmentBuffer.java:48-53),
   * keyframe time + scene rules (KeyFrameExtractor.java:57-78),
-  * batch/stream equivalence, and the JSON wire codec round-trip.
+  * every stateful run checked against the pure fold, and the JSON
+  * wire codec round-trip.
   */
 class VideoPipelineSpec extends AnyFunSuite {
 
@@ -138,19 +146,33 @@ class VideoPipelineSpec extends AnyFunSuite {
     }
   }
 
+  /** Asserts `got` holds exactly the events of the pure fold run per
+    * stream over all of `frames` on the driver, each once. `inOrder`
+    * also asserts each stream's events come in fold order.
+    */
+  private def assertPureFold(got: Seq[PipelineEvent], frames: Seq[VideoFrame],
+      inOrder: Boolean = false): Unit = {
+    def norm(es: Seq[PipelineEvent]) =
+      if (inOrder) es else es.sortBy(e => (e.timestamp, e.kind, e.frameId))
+    val sids = frames.map(_.streamId).distinct
+    val byStream = got.groupBy(_.streamId)
+    assert(byStream.keySet === sids.toSet)
+    for (sid <- sids) {
+      val expected = VideoPipeline.processFrames(sid,
+        frames.filter(_.streamId == sid), VideoPipeline.initialState, cfg,
+        VideoPipeline.defaultDetector(cfg))._1
+      assert(norm(byStream(sid)) === norm(expected), s"stream $sid")
+    }
+    assert(got.exists(_.kind == "segment"))
+  }
+
   test("batch process() equals the pure fold per key") {
     import spark.implicits._
     val frames = FrameGenerator.frames(streams = 2, fps = 5, durationSec = 500)
     val ds = spark.createDataset(scala.util.Random.shuffle(frames)) // order-independence
-    val got = VideoPipeline.process(ds, cfg).collect()
-      .groupBy(_.streamId).view.mapValues(_.toSeq).toMap
-    for (sid <- frames.map(_.streamId).distinct) {
-      val expected = VideoPipeline.processFrames(sid,
-        frames.filter(_.streamId == sid), VideoPipeline.initialState, cfg,
-        VideoPipeline.defaultDetector(cfg))._1
-      // events within a key are emitted in fold order
-      assert(got(sid) === expected, s"stream $sid")
-    }
+    // events within a key are emitted in fold order
+    assertPureFold(VideoPipeline.process(ds, cfg).collect().toSeq, frames,
+      inOrder = true)
   }
 
   test("streaming e2e (MemoryStream, 2 batches) matches single-batch run") {
@@ -167,69 +189,76 @@ class VideoPipelineSpec extends AnyFunSuite {
     q.processAllAvailable()
     val streamed = spark.table("pipe_out").as[PipelineEvent].collect()
     q.stop()
-
-    val batch = VideoPipeline.process(spark.createDataset(frames), cfg).collect()
-    // same event multiset (batch boundaries fall between frames in time
-    // order here, so state carries identically)
-    def key(e: PipelineEvent) = (e.kind, e.streamId, e.frameId, e.timestamp,
-      e.detections.map(_.objectClass).mkString(","),
-      e.segment.map(_.startTime).getOrElse(-1L)).toString
-    assert(streamed.map(key).sorted.toSeq === batch.map(key).sorted.toSeq)
-    assert(streamed.count(_.kind == "segment") > 0)
+    // the batch boundary falls between frames in time order, so state
+    // carries exactly as in one fold over all frames
+    assertPureFold(streamed.toSeq, frames)
   }
 
-  test("transformWithState path matches flatMapGroupsWithState across batches") {
-    // dedicated session (shared context): TWS requires the RocksDB
-    // state store provider, a session-level conf
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    locally {
-      import s2.implicits._
-      val frames = FrameGenerator.frames(streams = 2, fps = 5, durationSec = 500)
-      val (b1, b2) = frames.partition(_.timestamp < FrameGenerator.BASE_TS + 250000)
-      val mem = MemoryStream[VideoFrame](s2)
-      val q = VideoPipeline.processTWS(mem.toDS(), cfg).writeStream
-        .format("memory").queryName("tws_out").outputMode("append").start()
-      mem.addData(b1); q.processAllAvailable()
-      mem.addData(b2); q.processAllAvailable()
-      val streamed = s2.table("tws_out").as[PipelineEvent].collect()
-      q.stop()
-      val batch = VideoPipeline.process(s2.createDataset(frames), cfg).collect()
-      def key(e: PipelineEvent) = (e.kind, e.streamId, e.frameId, e.timestamp,
-        e.detections.map(_.objectClass).mkString(","),
-        e.segment.map(_.startTime).getOrElse(-1L)).toString
-      assert(streamed.map(key).sorted.toSeq === batch.map(key).sorted.toSeq)
-      assert(streamed.count(_.kind == "segment") > 0)
+  test("process plans one flatMapGroupsWithState over one hash exchange on streamId") {
+    import spark.implicits._
+    // `fold`: batch plans the operator as a stateless MapGroupsExec
+    def assertShape(plan: SparkPlan, fold: Class[_]): Unit = {
+      val p = plan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case other => other
+      }
+      val folds = p.collect { case n if fold.isInstance(n) => n }
+      val grouped = p.collect { case n @ (_: MapGroupsExec | _: StatefulOperator) => n }
+      val exchanges = p.collect { case e: ShuffleExchangeExec => e }
+      assert(folds.size === 1 && grouped === folds && exchanges.size === 1,
+        p.treeString)
+      assert(folds.head.find(_ eq exchanges.head).nonEmpty, p.treeString)
+      exchanges.head.outputPartitioning match {
+        case h: HashPartitioning =>
+          assert(h.expressions.collect { case a: Attribute => a.name } === Seq("streamId"))
+        case other => fail(s"exchange is not hashed on streamId: $other")
+      }
     }
+    val frames = FrameGenerator.frames(streams = 2, fps = 1, durationSec = 2)
+    assertShape(VideoPipeline.process(spark.createDataset(frames), cfg)
+      .queryExecution.executedPlan, classOf[MapGroupsExec])
+    val mem = MemoryStream[VideoFrame](spark)
+    val q = VideoPipeline.process(mem.toDS(), cfg).writeStream
+      .format("memory").queryName("plan_shape").outputMode("append").start()
+    try {
+      mem.addData(frames); q.processAllAvailable()
+      assertShape(q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+        .lastExecution.executedPlan, classOf[FlatMapGroupsWithStateExec])
+    } finally q.stop()
   }
 
-  /** Runs the first half of a two-camera stream through `first`, stops
-    * the query, and resumes from the same RocksDB checkpoint with
-    * `processTWS` on the second half. Returns the events of both runs
-    * and those of one uninterrupted batch run, as comparable keys.
-    */
-  private def twsResume(first: Dataset[VideoFrame] => Dataset[PipelineEvent])
-      : (Seq[String], Seq[String]) = {
-    // Dedicated session: the provider class is session-level conf.
+  /** A session on the RocksDB state store provider (session-level conf). */
+  private def rocksDb: SparkSession = {
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    import s2.implicits._
-    implicit val s: SparkSession = s2
-    val base = java.nio.file.Files.createTempDirectory("graft_tws_ckpt_").toString
+    s2
+  }
+
+  /** Streams the first half of a two-camera file source through `first`,
+    * stops the query ("kill" mid-stream), and resumes from the same
+    * checkpoint with `process` on the second half. Both runs' events
+    * must equal the pure fold over all frames: no duplicates, no loss,
+    * and segments spanning the restart prove the state carried.
+    */
+  private def assertResumes(session: SparkSession,
+      first: Dataset[VideoFrame] => Dataset[PipelineEvent] =
+        VideoPipeline.process(_, cfg)): Unit = {
+    import session.implicits._
+    implicit val s: SparkSession = session
+    val base = java.nio.file.Files.createTempDirectory("graft_ckpt_").toString
     val inDir = s"$base/in"; val ckpt = s"$base/ckpt"; val outDir = s"$base/out"
     new java.io.File(inDir).mkdirs()
 
     val frames = FrameGenerator.frames(streams = 2, fps = 5, durationSec = 500)
     val (b1, b2) = frames.partition(_.timestamp < FrameGenerator.BASE_TS + 250000)
     def writeBatch(fs: Seq[VideoFrame]): Unit =
-      FrameCodec.encode(s2.createDataset(fs)).select("value")
+      FrameCodec.encode(session.createDataset(fs)).select("value")
         .coalesce(1).write.mode("append").text(inDir)
 
     def startQuery(op: Dataset[VideoFrame] => Dataset[PipelineEvent]) = {
       val src = FrameCodec.decode(
-        s2.readStream.text(inDir).select($"value".cast("binary").as("value")))
+        session.readStream.text(inDir).select($"value".cast("binary").as("value")))
       op(src).writeStream
         .option("checkpointLocation", ckpt)
         .format("parquet").option("path", outDir)
@@ -238,46 +267,36 @@ class VideoPipelineSpec extends AnyFunSuite {
 
     writeBatch(b1)
     val q1 = startQuery(first)
-    q1.processAllAvailable(); q1.stop() // "kill" mid-stream
+    q1.processAllAvailable(); q1.stop()
     writeBatch(b2)
     // fresh query, same checkpoint → state restored
-    val q2 = startQuery(VideoPipeline.processTWS(_, cfg))
+    val q2 = startQuery(VideoPipeline.process(_, cfg))
     q2.processAllAvailable(); q2.stop()
-
-    val got = s2.read.parquet(outDir).as[PipelineEvent].collect()
-    val batch = VideoPipeline.process(s2.createDataset(frames), cfg).collect()
-    assert(got.count(_.kind == "segment") > 0)
-    def key(e: PipelineEvent) = (e.kind, e.streamId, e.frameId, e.timestamp,
-      e.detections.map(_.objectClass).mkString(","),
-      e.segment.map(_.startTime).getOrElse(-1L)).toString
-    (got.map(key).sorted.toSeq, batch.map(key).sorted.toSeq)
+    assertPureFold(session.read.parquet(outDir).as[PipelineEvent].collect().toSeq,
+      frames)
   }
 
-  test("transformWithState checkpoint recovery: kill mid-stream, resume equals uninterrupted run") {
-    // The Spark-4 StatefulProcessor path (SURVEY §2 row D's stated
-    // target) must restore its ValueState from the RocksDB-provider
-    // checkpoint across a query restart — the reference's exactly-once
-    // state contract (VideoProcessFunction.java:154-191). Open-segment
-    // buffers carry through the checkpoint, no duplicates, no loss.
-    val (got, expected) = twsResume(VideoPipeline.processTWS(_, cfg))
-    assert(got === expected)
+  test("RocksDB checkpoint recovery: kill mid-stream, resume equals the pure fold") {
+    // The reference's exactly-once state contract
+    // (VideoProcessFunction.java:154-191) on the provider the backfill
+    // runs: open-segment state carries through the checkpoint.
+    assertResumes(rocksDb)
   }
 
-  test("transformWithState resumes a checkpoint written by the groupByKey(_.streamId) shape") {
-    // Checkpoints written while processTWS keyed with a typed function
+  test("process resumes a checkpoint written by the groupByKey(_.streamId) shape") {
+    // Checkpoints written while the fold keyed with a typed function
     // (an AppendColumns key column) must resume under the column-keyed
     // shape: same exchange, same key hash, same key and state encoding.
-    val (got, expected) = twsResume { frames =>
+    // locals, so the closure does not capture the (unserializable) spec
+    val (c, det) = (cfg, VideoPipeline.defaultDetector(cfg))
+    assertResumes(rocksDb, { frames =>
       import frames.sparkSession.implicits._
-      frames.groupByKey(_.streamId).transformWithState(
-        new VideoPipeline.VideoStatefulProcessor(cfg,
-          VideoPipeline.defaultDetector(cfg)),
-        TimeMode.None(), OutputMode.Append())
-    }
-    assert(got === expected)
+      frames.groupByKey(_.streamId).flatMapGroupsWithState(OutputMode.Append,
+        GroupStateTimeout.NoTimeout)(VideoPipeline.groupFn(c, det))
+    })
   }
 
-  test("state holds one row per stream, not per frame, on both stateful paths") {
+  test("state holds one row per stream, not per frame, on both state stores") {
     // The fold keeps only StreamState per key (open segments are
     // summaries, not buffered frames), so state is O(streams) however
     // many frames and micro-batches went through.
@@ -286,31 +305,18 @@ class VideoPipelineSpec extends AnyFunSuite {
     val batches = frames.groupBy(f => (f.timestamp - FrameGenerator.BASE_TS) / 60000)
       .toSeq.sortBy(_._1).map(_._2)
     assert(batches.size == 3)
-    def rowsAfterBatches(mem: MemoryStream[VideoFrame], q: StreamingQuery): Long =
+    def rowsAfterBatches(session: SparkSession): Long = {
+      import session.implicits._
+      val base = java.nio.file.Files.createTempDirectory("graft_state_rows_").toString
+      val mem = MemoryStream[VideoFrame](session)
+      val q = VideoPipeline.runStreaming(mem.toDS(), s"$base/out", s"$base/ckpt", cfg)
       try {
         batches.foreach { b => mem.addData(b); q.processAllAvailable() }
         q.lastProgress.stateOperators(0).numRowsTotal
       } finally q.stop()
-
-    val base = java.nio.file.Files.createTempDirectory("graft_state_rows_").toString
-    val viaRunStreaming = {
-      import spark.implicits._
-      val mem = MemoryStream[VideoFrame](spark)
-      rowsAfterBatches(mem, VideoPipeline.runStreaming(mem.toDS(),
-        s"$base/out", s"$base/ckpt", cfg))
     }
-    // Dedicated session: the provider class is session-level conf.
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val viaTWS = {
-      import s2.implicits._
-      val mem = MemoryStream[VideoFrame](s2)
-      rowsAfterBatches(mem, VideoPipeline.processTWS(mem.toDS(), cfg).writeStream
-        .format("memory").queryName("tws_state_rows").outputMode("append").start())
-    }
-    assert(viaRunStreaming === streams)
-    assert(viaTWS === streams)
+    assert(rowsAfterBatches(spark) === streams)
+    assert(rowsAfterBatches(rocksDb) === streams)
   }
 
   test("signature counts in ints yet stays bit-identical to the summing loop") {
@@ -463,43 +469,7 @@ class VideoPipelineSpec extends AnyFunSuite {
   }
 
   test("checkpoint recovery: state survives a query restart (file source)") {
-    import spark.implicits._
-    implicit val s: SparkSession = spark
-    val base = java.nio.file.Files.createTempDirectory("graft_ckpt_").toString
-    val inDir = s"$base/in"; val ckpt = s"$base/ckpt"; val outDir = s"$base/out"
-    new java.io.File(inDir).mkdirs()
-
-    val frames = FrameGenerator.frames(streams = 2, fps = 5, durationSec = 500)
-    val (b1, b2) = frames.partition(_.timestamp < FrameGenerator.BASE_TS + 250000)
-    def writeBatch(fs: Seq[VideoFrame], name: String): Unit =
-      FrameCodec.encode(spark.createDataset(fs)).select("value")
-        .coalesce(1).write.mode("append").text(inDir)
-
-    def startQuery() = {
-      val src = FrameCodec.decode(
-        spark.readStream.text(inDir).select($"value".cast("binary").as("value")))
-      VideoPipeline.process(src, cfg).writeStream
-        .option("checkpointLocation", ckpt)
-        .format("parquet").option("path", outDir)
-        .outputMode("append").start()
-    }
-
-    writeBatch(b1, "b1")
-    val q1 = startQuery()
-    q1.processAllAvailable(); q1.stop()
-    writeBatch(b2, "b2")
-    val q2 = startQuery() // fresh query, same checkpoint → state restored
-    q2.processAllAvailable(); q2.stop()
-
-    val got = spark.read.parquet(outDir).as[PipelineEvent].collect()
-    val batch = VideoPipeline.process(spark.createDataset(frames), cfg).collect()
-    def key(e: PipelineEvent) = (e.kind, e.streamId, e.frameId, e.timestamp,
-      e.detections.map(_.objectClass).mkString(","),
-      e.segment.map(_.startTime).getOrElse(-1L)).toString
-    // exactly-once across the restart: no duplicates, no loss, and
-    // segments spanning the restart boundary prove state continuity
-    assert(got.map(key).sorted.toSeq === batch.map(key).sorted.toSeq)
-    assert(got.count(_.kind == "segment") > 0)
+    assertResumes(spark)
   }
 
   test("frame codec round-trip preserves frames byte-for-byte") {
