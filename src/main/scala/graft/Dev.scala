@@ -29,6 +29,10 @@ import org.apache.spark.sql.functions._
   *     candidate growth stays linear), and PartitionedPrefix.cumulative
   *     against a single-partition window on 1M/8M-row histograms. sf0.1
   *     is overhead-dominated; scaling claims need the data to be the cost.
+  *     The prefix sums depend on the thread count: the two-pass rewrite
+  *     broke even near 8M rows at local[32] (5.60 vs 2.87 s), but on
+  *     local[4] it lost at both sizes (1M: 2.39 vs 1.81 s; 8M: 10.98 vs
+  *     10.20 s) — state the session's cores with any number it prints.
   */
 object Dev {
   private val Usage = "usage: graft.Dev meter|dump <sfDir> <outDir> [q1,q2|all]" +
@@ -98,7 +102,7 @@ object Dev {
         def time(name: String)(mk: => DataFrame): Unit =
           measure(name, passes = 3, stages = true)(mk)
         def shared: DataFrame =
-          Dedup.tripleSigs(docs).transform(plans.CacheLifecycle.autoRelease)
+          plans.CacheLifecycle.materializeSpread(Dedup.tripleSigs)(docs)
         time("docs_scan")(docs)
         time("tripleSigs")(Dedup.tripleSigs(docs))
         time("minhash_pairs")(Dedup.minhashPairsFrom(shared))

@@ -59,10 +59,9 @@ object Harness {
     * EliminateSorts drops orderBy — narrow scan→project queries would
     * time only the scan. The noop sink consumes every output row/column,
     * so the timed pass executes exactly the work a real consumer would.
-    * clearCache in finally: queries persist() intermediate signature
-    * tables, and a query that THROWS mid-action must not leak its
-    * cached blocks into the next query's timed passes. Clearing per
-    * pass also keeps every timed pass an honest full recompute.
+    * clearCache in finally: connectedComponents persists its edge
+    * table between rounds, and a query that THROWS mid-loop must not
+    * leak those cached blocks into the next query's timed passes.
     */
   def timedPass(spark: SparkSession)(mk: => DataFrame): Double = {
     val t0 = System.nanoTime()

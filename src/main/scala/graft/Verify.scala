@@ -67,7 +67,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      finally spark.catalog.clearCache() // release per-query persist()s
+      finally spark.catalog.clearCache() // a failed query's leftover persist()s
     }
     // Ten oracles replay from the q145 pair store: make sure it exists
     // even under a name-filtered run or a swallowed q145 failure, so

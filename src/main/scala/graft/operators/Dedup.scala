@@ -117,8 +117,8 @@ object Dedup {
     * argument as q42's bucket cap).
     *
     * r13: the posting-table CACHE is retired. The old shape persisted
-    * `pre` (autoRelease) because the explode re-ran per consumer
-    * branch — but the explode reads the caller's checkpointed
+    * `pre` (a lazy SQL-cache entry) because the explode re-ran per
+    * consumer branch — but the explode reads the caller's checkpointed
     * signature table (a column-pruned 8-byte-hash projection; the
     * probe measured its re-scan at ~zero), while the InMemoryRelation
     * build + columnar reads it paid for were the measured cost at
@@ -719,16 +719,17 @@ object Dedup {
     val contained = docs.select(col("doc_id").as("doc_a"),
       col("nt").as("nt_a"), least(col("nt"), lit(8)).as("l"),
       anchor(least(col("nt"), lit(8))).as("h"))
-    // persisted: the anchor pass (tokenize + up to 8 prefix hashes
+    // checkpointed: the anchor pass (tokenize + up to 8 prefix hashes
     // per doc) feeds BOTH the hot-bucket agg and the anti-join probe
-    // side — the minhashCandidates cache contract, owned here via
-    // autoRelease; the cached frame is 4 small columns × ≤ 8 rows/doc
+    // side, and re-running it per branch measured dearer than one
+    // checkpoint job (plans/r14/materialize_sites.md); the frame is 4
+    // small columns × ≤ 8 rows/doc
     val container = docs
       .select(col("doc_id").as("doc_b"), col("nt").as("nt_b"),
         explode(sequence(lit(1), least(col("nt"), lit(8)))).as("l"),
         col("text"))
       .select(col("doc_b"), col("nt_b"), col("l"), anchor(col("l")).as("h"))
-      .transform(graft.plans.CacheLifecycle.autoRelease)
+      .localCheckpoint()
     val hot = container.groupBy(col("l"), col("h"))
       .agg(count(lit(1)).as("n"))
       .filter(col("n") > MAX_BUCKET).select(col("l"), col("h"))
@@ -966,10 +967,10 @@ object Dedup {
     * census, all computed in the one spread pass; the two returned
     * frames are narrow projections of the same checkpointed blocks.
     *
-    * localCheckpoint (via materializeSpread), not autoRelease: the
-    * consumers sit ACROSS the broadcast gates' measuring actions — an
-    * autoRelease cache would release itself on the first gate count
-    * (the q152 pairs rationale).
+    * localCheckpoint (via materializeSpread), not a plain subtree: the
+    * consumers sit ACROSS the broadcast gates' measuring actions, and
+    * a plain frame would re-run the corpus scan and every signature
+    * kernel in each of those actions.
     *
     * Returns (shingled, sigs): shingled = (doc_id, source, nt, sh
     * [k=5 sorted hashes], nbg, topc), sigs = (doc_id, bands, hl, sh
@@ -2465,13 +2466,13 @@ object Dedup {
         val docs = Tables.documents(s, dir)
           .select(col("doc_id"), col("text"))
         val ver = ppjoinVerifiedFrom(sortedShingleHashes(docs)
-          .transform(graft.plans.CacheLifecycle.autoRelease))
+          .localCheckpoint())
         val fan = ver.select(col("doc_a"), col("doc_b"), col("inter"),
             col("un"),
             explode(array(lit(50L), lit(70L), lit(90L)))
               .as("threshold_pct"))
           .filter(col("inter") * 100 >= col("threshold_pct") * col("un"))
-          .transform(graft.plans.CacheLifecycle.autoRelease)
+          .localCheckpoint()
         val pairs = fan.groupBy(col("threshold_pct"))
           .agg(count(lit(1)).as("n_pairs"))
         val docsIn = fan
@@ -2591,12 +2592,11 @@ object Dedup {
     QueryDef("q145_pairs_store",
       (s, dir) => {
         val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-        // localCheckpoint, not autoRelease: the store WRITE is its own
-        // action, after which autoRelease would drop the cache and the
-        // drift audit would re-mine the whole 5-signal union from
-        // scratch (measured ~2x the query). The mined list is a deep
-        // lineage with two separate consuming actions — exactly the
-        // q134 truncation rule.
+        // localCheckpoint: the store WRITE is its own action, and a
+        // plain frame would make the drift audit re-mine the whole
+        // 5-signal union from scratch (measured ~2x the query). The
+        // mined list is a deep lineage with two separate consuming
+        // actions — exactly the q134 truncation rule.
         val fresh = minePairs(docs, Some(Tables.embeddings(s, dir)))
           .localCheckpoint()
         // atomic-rename publication under OracleDump.baseDir: the
@@ -2607,7 +2607,6 @@ object Dedup {
           s"graft_pairs_store_${new java.io.File(dir).getName}")(
           writePairsStore(fresh, _))
         val store = readPairsStore(s, path)
-          .transform(graft.plans.CacheLifecycle.autoRelease)
         val drift = multisetDriftCount(store, fresh)
         store.select(col("doc_a"), col("doc_b"),
             explode(expr("filter(array(" +
@@ -2682,7 +2681,6 @@ object Dedup {
             col("src_exact").cast("int") + col("src_minhash").cast("int")
               + col("src_simhash").cast("int") + col("src_ppjoin").cast("int")
               + col("src_embed").cast("int"))
-          .transform(graft.plans.CacheLifecycle.autoRelease)
         // one row per (signal, endpoint): pair/unique counts halve the
         // row count back; doc reach is a distinct over endpoints
         val tall = pairs.select(col("doc_a"), col("doc_b"), col("nf"),
@@ -2811,7 +2809,6 @@ object Dedup {
             col("source").as("src_a")), "doc_a")
           .join(docs.select(col("doc_id").as("doc_b"),
             col("source").as("src_b")), "doc_b")
-          .transform(graft.plans.CacheLifecycle.autoRelease)
         val m = withSrc.agg(count(lit(1)).as("m"))
         // endpoint degree mass per source + intra-edge counts
         val degS = withSrc.select(col("src_a").as("source"))
@@ -2986,7 +2983,7 @@ object Dedup {
             when(col("u") * 10 < two64 * 9, "train")
               .when(col("u") * 20 < two64 * 19, "val")
               .otherwise("test"))
-          .transform(graft.plans.CacheLifecycle.autoRelease) // census + check
+          .localCheckpoint() // census + check
         val sa = lab.select(col("doc_id"), col("split"))
         // ONE measurement gates BOTH leak-check joins (r13): |leak| ≤
         // |pairs| exactly (sa is unique per doc_id, so each pair row
@@ -3171,9 +3168,9 @@ object Dedup {
     // measured-small sides broadcast onto the corpus, oversize sides
     // fall back to doc_id equi-joins under AQE. The shingled corpus
     // projection is localCheckpoint-ed because three branches consume
-    // it ACROSS the gate's measuring actions (an autoRelease cache
-    // would release itself on the first gate count — the q152 pairs
-    // rationale). The oracle replays the graph side from the q145
+    // it ACROSS the gate's measuring actions (a plain frame would
+    // re-shingle the corpus in each of them). The oracle replays the
+    // graph side from the q145
     // store (the q152 pattern) and the n-gram side with q48's exact
     // hash64 replay.
     QueryDef("q156_dup_aware_decontamination",
@@ -3364,7 +3361,6 @@ object Dedup {
       .union(pairs.select(col("doc_b").as("u"), col("doc_a").as("v")))
     val deg = edges.groupBy(col("u")).agg(count(lit(1)).as("deg"))
       .select(col("u").as("id"), col("deg"))
-      .transform(graft.plans.CacheLifecycle.autoRelease)
     // orient u -> v iff π(u) < π(v); carry the destination's degree
     // so out-lists below sort in π order
     val du = deg.select(col("id").as("u"), col("deg").as("du"))
@@ -3373,7 +3369,6 @@ object Dedup {
       .filter(col("du") < col("dv") ||
         (col("du") === col("dv") && col("u") < col("v")))
       .select(col("u"), col("v"), col("dv"))
-      .transform(graft.plans.CacheLifecycle.autoRelease)
     // π-sorted out-lists; wedge (v, w) pairs with π(v) < π(w)
     // enumerated in-array (an oriented edge v→w can only exist with
     // π(v) < π(w), so these are the only candidates worth emitting)

@@ -178,12 +178,12 @@ object Multimodal {
     val ds = sigs.groupBy(col("b0"), col("b1"), col("b2"), col("b3"))
       .agg(count(lit(1)).as("nm"))
       .withColumn("sid", sidCol)
-    // cached: the band explosion feeds BOTH the hot-bucket agg and
-    // the anti-join probe side (the q99 container pattern)
+    // the band explosion feeds BOTH the hot-bucket agg and the
+    // anti-join probe side (the q99 container pattern)
     val bandRows = ds.select(col("sid"), col("b0"), col("b1"), col("b2"),
       col("b3"), posexplode(array(col("b0"), col("b1"), col("b2"),
         col("b3"))).as(Seq("bi", "v")))
-      .transform(graft.plans.CacheLifecycle.autoRelease)
+      .localCheckpoint()
     val hot = bandRows.groupBy(col("bi"), col("v"))
       .agg(count(lit(1)).as("n"))
       .filter(col("n") > maxBucket).select(col("bi"), col("v"))

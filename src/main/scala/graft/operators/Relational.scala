@@ -446,7 +446,6 @@ object Relational {
           .filter(col("value").isNotNull && !isnan(col("value")))
           .select(col("event_type"),
             expr("CAST(round(value * 100) AS BIGINT)").as("v"))
-          .transform(graft.plans.CacheLifecycle.autoRelease)
         val bounds = base.agg(min(col("v")).as("mn"), max(col("v")).as("mx"))
         val hist = base.crossJoin(broadcast(bounds))
           .withColumn("w", expr("(mx - mn) div 1024 + 1"))
@@ -843,8 +842,8 @@ object Relational {
     // row_number reaches ceil(n/2)) so neither engine's percentile
     // built-in rank conventions can diverge, and the outlier cut
     // |v − med| > 5·mad is a pure integer comparison. The 2-column
-    // (type, cents) projection is persisted once and feeds the median
-    // pass, the deviation pass, and the outlier count; the per-type
+    // (type, cents) scan projection feeds the median pass, the
+    // deviation pass, and the outlier count; the per-type
     // medians/MADs broadcast back (|types| rows). At 100 TB the two
     // per-type sorts are the honest cost of EXACT robust statistics —
     // the q111 histogram estimates are the approximation this audits.
@@ -855,7 +854,6 @@ object Relational {
           .filter(col("value").isNotNull && !isnan(col("value")))
           .select(col("event_type"),
             expr("CAST(round(value * 100) AS BIGINT)").as("v"))
-          .transform(graft.plans.CacheLifecycle.autoRelease)
         val wT = Window.partitionBy(col("event_type"))
         def orderStat(df: org.apache.spark.sql.DataFrame, c: String) =
           df.withColumn("rn", row_number().over(
@@ -1005,7 +1003,7 @@ object Relational {
           .filter(col("nxt").isNotNull)
         val tr = nx.groupBy(col("cur"), col("nxt"))
           .agg(count(lit(1)).as("n"))
-          .transform(graft.plans.CacheLifecycle.autoRelease)
+          .localCheckpoint()
         val edges = tr.join(broadcast(
           tr.groupBy(col("cur")).agg(sum(col("n")).as("out_n"))), "cur")
         // The contracted graph is BOUNDED (≤ |types|² edges at any
@@ -1301,7 +1299,6 @@ object Relational {
           .join(counts, Seq("day", "hour"), "left")
           .select(col("day"), col("hour"),
             coalesce(col("c"), lit(0L)).as("c"))
-          .transform(graft.plans.CacheLifecycle.autoRelease)
         val wH = Window.partitionBy(col("hour"))
         def stat(df: org.apache.spark.sql.DataFrame, cn: String) =
           df.withColumn("rn", row_number().over(
@@ -1399,7 +1396,6 @@ object Relational {
           .select(col("event_type"), col("user_id"),
             call_function("graft_hash64",
               col("user_id").cast("string")).as("h"))
-          .transform(graft.plans.CacheLifecycle.autoRelease)
         val a = ev.filter(col("event_type") === "view")
         val b = ev.filter(col("event_type") === "purchase")
         val skA = a.agg(cms(col("h")).as("ska"),
@@ -1506,7 +1502,6 @@ object Relational {
             // the 2-D box predicate under test
             expr("CASE WHEN ub BETWEEN 64 AND 127"
               + " AND tb BETWEEN 32 AND 95 THEN 1 ELSE 0 END").as("hit"))
-          .transform(graft.plans.CacheLifecycle.autoRelease)
         val fan = base.select(col("ub"), col("tb"), col("mz"), col("ml"),
           col("hit"),
           explode(array(
@@ -1716,9 +1711,9 @@ object Relational {
         val ev = Tables.events(s, dir)
           .filter(col("event_type").isNotNull)
           .select(col("user_id"), col("event_type")).distinct()
-          .transform(graft.plans.CacheLifecycle.autoRelease)
+          .localCheckpoint()
         val ua = ev.groupBy(col("event_type")).agg(count(lit(1)).as("ua"))
-          .transform(graft.plans.CacheLifecycle.autoRelease)
+          .localCheckpoint()
         val um = ev.groupBy(col("user_id"))
           .agg(sort_array(collect_set(col("event_type"))).as("tset"))
         val both = um.select(

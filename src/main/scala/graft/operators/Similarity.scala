@@ -164,7 +164,7 @@ object Similarity {
       // positive cosine threshold, and dividing by their norm under
       // ANSI kills the pass — exclude them from the miner up front
       .filter(col("nrm") > 0d)
-      .transform(graft.plans.CacheLifecycle.autoRelease) // both self-join sides; one bucket-UDF pass
+      .localCheckpoint() // both self-join sides; one bucket-UDF pass
 
     val sliced = e.select(col("vec_id"), col("embedding"), col("bucket"),
       col("nrm"),
@@ -239,7 +239,7 @@ object Similarity {
       thresh: Long): org.apache.spark.sql.DataFrame = {
     graft.plans.GraftFunctions.ensure(emb.sparkSession)
     val q = KMeans.quantized(emb, "vec_id", "embedding")
-      .transform(graft.plans.CacheLifecycle.autoRelease)
+      .localCheckpoint()
     val seeds = q.filter(col("id") < 8)
       .select(col("id").as("cid"), col("qa").as("cq"))
     // Pair distances below use q121's exact expansion d² = |a|² +
@@ -254,7 +254,7 @@ object Similarity {
         col("cid"))
       .withColumn("n2", VectorKernels.dot(col("qd"), col("qd"))
         .cast("long"))
-      .transform(graft.plans.CacheLifecycle.autoRelease)
+      .localCheckpoint()
     val nSalt = 8
     val a = asg.select(col("cid"), col("id").as("va"),
       col("qd").as("qd_a"), col("n2").as("n2_a"),
@@ -801,10 +801,10 @@ object Similarity {
           .select(col("label"), col("dim"),
             expr("((sq + 1000000 * n) * 2 + n) div (2 * n) - 1000000")
               .as("cq"))
-          // persisted (auto-released): both self-join sides read this
-          // labels×dims table — unpinned, each side would re-run the
-          // corpus-sized centroid build (the q86 histogram lesson)
-          .transform(graft.plans.CacheLifecycle.autoRelease)
+          // both self-join sides read this labels×dims table; its
+          // (label, dim) aggregation exchange is canonically the same
+          // on both sides, so AQE exchange reuse runs the corpus-sized
+          // centroid build once
         val pairs = cent.as("a")
           .join(broadcast(cent.as("b")),
             col("a.dim") === col("b.dim") && col("a.label") < col("b.label"))
@@ -855,11 +855,11 @@ object Similarity {
     // ppm. The embedding-side twin of q89 (the engine measuring its
     // own approximation): the nProbe-sizing feedback loop a vector
     // pipeline runs before trusting its index, in-plan. Both the
-    // exact branch and the ANN re-rank read ONE shared persisted
-    // scored projection (vec_id, label, cos_raw — 20 bytes/row, far
-    // smaller than the vectors); the corpus is touched once more only
-    // for the centroid train pass (inevitable — that IS the index
-    // build). Rankings are deterministic on both sides (cos_raw is
+    // exact branch and the ANN re-rank read ONE checkpointed scored
+    // projection (vec_id, label, cos_raw — 20 bytes/row, far smaller
+    // than the vectors); the corpus is touched once more only for the
+    // centroid train pass (inevitable — that IS the index build).
+    // Rankings are deterministic on both sides (cos_raw is
     // bit-identical by the left-assoc FP convention; vec_id breaks
     // ties), and the ppm division is nullif-guarded on both engines
     // (q89's degenerate-corpus rule).
@@ -868,7 +868,7 @@ object Similarity {
         val e = Tables.embeddings(s, dir)
         val cosQ = cosQueryCol
         val scored = e.select(col("vec_id"), col("label"), cosQ.as("cos_raw"))
-          .transform(graft.plans.CacheLifecycle.autoRelease)
+          .localCheckpoint()
         val exact = scored
           .orderBy(col("cos_raw").desc, col("vec_id")).limit(10)
           .select(col("vec_id"))
@@ -1037,7 +1037,7 @@ object Similarity {
         val half = DIM / 2
         val q = KMeans.quantized(Tables.embeddings(s, dir),
             "vec_id", "embedding")
-          .transform(graft.plans.CacheLifecycle.autoRelease)
+          .localCheckpoint()
         val cb0 = KMeans.fold(pqRefined(pqSub(q, 0, half)))
           .select(col("cents").as("cents0"))
         val cb1 = KMeans.fold(pqRefined(pqSub(q, 1, half)))
@@ -1181,10 +1181,10 @@ object Similarity {
     // K rows, the q55 TakeOrderedAndProject argument), the (n_probe,
     // label) probe sets fan out from that one ranking, and each
     // sweep point's top-10 runs through row_number ≤ 10 → the bounded
-    // TopKPerKey heap, partitioned BY sweep point. One scored corpus
-    // projection (20 B/row, cached) feeds the exact top-10 and all
-    // four ANN rankings — the corpus is scanned once, re-ranked four
-    // ways, never re-scored.
+    // TopKPerKey heap, partitioned BY sweep point. One checkpointed
+    // scored corpus projection (20 B/row) feeds the exact top-10 and
+    // all four ANN rankings — the corpus is scanned once, re-ranked
+    // four ways, never re-scored.
     QueryDef("q107_ivf_probe_curve",
       (s, dir) => {
         graft.plans.TopK.ensure(s)
@@ -1192,7 +1192,7 @@ object Similarity {
         val cosQ = cosQueryCol
         val scored = e.select(col("vec_id"), col("label"),
             cosQ.as("cos_raw"))
-          .transform(graft.plans.CacheLifecycle.autoRelease)
+          .localCheckpoint()
         // the cell-ranking frame is the K-cell score table — bounded
         // by the constant cell count, so one partition is the right
         // plan; onePart pins it explicitly (a bare unpartitioned spec
@@ -1317,7 +1317,7 @@ object Similarity {
         }
         val scored = e.select(col("vec_id") +:
             TRUNC_DIMS.map(d => scoreAt(d).as(s"sc$d")): _*)
-          .transform(graft.plans.CacheLifecycle.autoRelease)
+          .localCheckpoint()
         val fan = scored.select(col("vec_id"),
             explode(array(TRUNC_DIMS.map(d => struct(
               lit(d.toLong).as("dims"), col(s"sc$d").as("sc"))): _*)).as("p"))
@@ -1411,7 +1411,6 @@ object Similarity {
           .select(col("id"), col("qa").cast("array<double>").as("qa"))
           .withColumn("n2",
             VectorKernels.dot(col("qa"), col("qa")).cast("long"))
-          .transform(graft.plans.CacheLifecycle.autoRelease)
         val panel = pv.filter(col("id") < 200)
           .select(col("id").as("qid"), col("qa").as("pq"),
             col("n2").as("pn2"))
@@ -1488,7 +1487,7 @@ object Similarity {
             bit_count(bucket.bitwiseXOR(lit(qBucket))).cast("long")
               .as("hd"),
             cos.as("cos_raw"))
-          .transform(graft.plans.CacheLifecycle.autoRelease)
+          .localCheckpoint()
         val radii = array(lit(16L), lit(24L), lit(32L), lit(64L))
         val fan = scored
           .select(col("vec_id"), col("cos_raw"), col("hd"),
@@ -1652,7 +1651,7 @@ object Similarity {
         val half = DIM / 2
         val q = KMeans.quantized(Tables.embeddings(s, dir),
             "vec_id", "embedding")
-          .transform(graft.plans.CacheLifecycle.autoRelease)
+          .localCheckpoint()
         val coarse = KMeans.fold(q.filter(col("id") < 8)
           .select(col("id").as("cid"), col("qa").as("cq")))
         val cb0 = KMeans.fold(pqRefined(pqSub(q, 0, half)))
@@ -1699,7 +1698,7 @@ object Similarity {
           .select(col("qid"), col("cell"))
         val cand = coded.join(broadcast(probes), Seq("cell"))
           .filter(col("id") =!= col("qid"))
-          .transform(graft.plans.CacheLifecycle.autoRelease)
+          .localCheckpoint()
         val nCand = cand.groupBy(col("qid"))
           .agg(count(lit(1)).as("n_cand"))
         val approx = cand

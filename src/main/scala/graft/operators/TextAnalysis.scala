@@ -131,23 +131,18 @@ object TextAnalysis {
     * hashed it in a second pass — measured ~2x slower and allocation-
     * heavy; q48 was the engine's slowest query because of it).
     *
-    * Cache contract (shared with minhashCandidates/prefixCandidates):
-    * persists the shingled docs for the duration of the returned plan —
-    * the test and train branches would otherwise each recompute the
-    * shingle construction over the full scan. Persisted via
-    * CacheLifecycle.autoRelease: the cache releases itself after the
-    * first consuming action, no caller-side clearCache is owed.
+    * The shingled docs are checkpointed (CacheLifecycle's contract):
+    * the test and train branches would otherwise each re-run the scan
+    * and the shingle kernel, which measured dearer than the one
+    * checkpoint job (plans/r14/materialize_sites.md).
     */
   private[graft] def contaminationProbe(docsIn: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    // persist the shingled docs: the test and train branches would
-    // otherwise each recompute the 5-gram construction over the
-    // full scan (the q42 persist rationale)
     val docs = docsIn
       .select(col("doc_id"), col("source"),
         call_function("graft_shingle_hashes",
           coalesce(col("text"), lit("")), lit(5)).as("sh"))
-      .transform(graft.plans.CacheLifecycle.autoRelease)
+      .localCheckpoint()
     val test = docs.filter(col("source") === "src0")
       .select(col("doc_id"), explode(col("sh")).as("s"))
     val train = docs.filter(col("source") =!= "src0")
@@ -724,14 +719,13 @@ object TextAnalysis {
           graft.functions.CmsSketchAgg.estimate(sk.toIndexedSeq, base,
             depth, width)
         }
-        // persist: the sketch aggregate AND the exact top-20 both
-        // consume the scan→explode→hash pass (the q42 persist
-        // rationale)
+        // checkpointed: the sketch aggregate AND the exact top-20 both
+        // consume the scan→explode→hash pass
         val occ = Tables.documents(s, dir)
           .select(toks.as("t"))
           .select(explode(bigramsOfT).as("bg"))
           .select(col("bg"), hash64C(col("bg")).as("hb"))
-          .transform(graft.plans.CacheLifecycle.autoRelease)
+          .localCheckpoint()
         val sketch = occ.agg(cms(col("hb")).as("sk"))
         val top = occ.groupBy(col("bg"))
           .agg(count(lit(1)).as("exact_count"), first(col("hb")).as("hb"))
@@ -937,7 +931,7 @@ object TextAnalysis {
           .select(col("source"), explode(col("t")).as("tok"))
           .groupBy(col("source"), col("tok"))
           .agg(count(lit(1)).as("tf"))
-          .transform(graft.plans.CacheLifecycle.autoRelease) // three downstream aggregation branches
+          .localCheckpoint() // three downstream aggregation branches
         val srcTot = st.groupBy(col("source")).agg(sum(col("tf")).as("tok_s"))
         val corpusTf = st.groupBy(col("tok")).agg(sum(col("tf")).as("ctf"))
         val total = st.agg(sum(col("tf")).as("n_tok"))
@@ -1377,15 +1371,13 @@ object TextAnalysis {
         import org.apache.spark.sql.expressions.Window
         val dec38 = org.apache.spark.sql.types.DataTypes
           .createDecimalType(38, 0)
-        // persisted (auto-released): srcs/corp/grid all derive from
-        // this one histogram — without the pin each branch re-scans and
-        // re-aggregates the corpus (observed: 4 parquet scans). The
-        // histogram is bounded domain (sources × distinct lengths), so
-        // the cache is tiny.
+        // srcs/corp/grid all derive from this one histogram; its
+        // (source, v) aggregation exchange is canonically the same in
+        // every branch, so AQE exchange reuse aggregates the corpus
+        // once (bounded domain: sources × distinct lengths)
         val hist = Tables.documents(s, dir)
           .groupBy(col("source"), col("n_chars").as("v"))
           .agg(count(lit(1)).as("c"))
-          .transform(graft.plans.CacheLifecycle.autoRelease)
         val srcs = hist.groupBy(col("source"))
           .agg(sum(col("c")).as("n_s"))
         // r13: the corpus CDF runs as a range-bucketed two-pass prefix
@@ -1525,7 +1517,6 @@ object TextAnalysis {
           .select(col("source"), explode(toks).as("tok"))
           .groupBy(col("source"), col("tok"))
           .agg(count(lit(1)).as("c_st"))
-          .transform(graft.plans.CacheLifecycle.autoRelease)
         val wc = hist.groupBy(col("tok")).agg(sum(col("c_st")).as("c"))
         val tot = wc.agg(sum(col("c")).as("total"))
         val bits = wc.crossJoin(broadcast(tot))
@@ -1587,7 +1578,7 @@ object TextAnalysis {
           .select(col("source"), explode(toks).as("tok"))
           .groupBy(col("source"), col("tok"))
           .agg(count(lit(1)).as("c_st"))
-          .transform(graft.plans.CacheLifecycle.autoRelease)
+          .localCheckpoint()
         val wc = hist.groupBy(col("tok")).agg(sum(col("c_st")).as("c_t"))
         val srcs = hist.groupBy(col("source")).agg(sum(col("c_st")).as("n_s"))
         val tot = wc.agg(sum(col("c_t")).as("n"))
@@ -1784,7 +1775,6 @@ object TextAnalysis {
           .select(col("source"), toks.as("t"))
           .select(col("source"), explode(trigramsOfT).as("tg"))
           .distinct()
-          .transform(graft.plans.CacheLifecycle.autoRelease)
         val ex = hist.groupBy(col("source")).agg(count(lit(1)).as("n_exact"))
         val regs = hist
           .select(col("source"), mixedHashC(col("tg")).as("h"))
@@ -1872,7 +1862,6 @@ object TextAnalysis {
           .select(col("lang"), toks.as("t"))
           .select(col("lang"), explode(trigramsOfT).as("tg"))
           .distinct()
-          .transform(graft.plans.CacheLifecycle.autoRelease)
         val pos = dt
           .select(col("lang"), col("tg"), mixedHashC(col("tg")).as("h"))
           .select(col("lang"), col("tg"),
@@ -2178,14 +2167,13 @@ object TextAnalysis {
     // and exact are pure integer arithmetic — both engines replay them
     // bit-for-bit (no percentile built-ins whose rank conventions
     // could differ). The 2-column base projection is scanned by the
-    // bounds pass, the histogram, and the audit — persisted once via
-    // the self-releasing cache.
+    // bounds pass, the histogram, and the audit — checkpointed once.
     QueryDef("q111_hist_quantiles",
       (s, dir) => {
         import org.apache.spark.sql.expressions.Window
         val base = Tables.documents(s, dir)
           .select(col("lang"), size(toks).cast("long").as("nt"))
-          .transform(graft.plans.CacheLifecycle.autoRelease)
+          .localCheckpoint()
         val bounds = base.agg(min(col("nt")).as("mn"),
           max(col("nt")).as("mx"))
         val hist = base.crossJoin(broadcast(bounds))
@@ -2345,8 +2333,8 @@ object TextAnalysis {
     // intersection folded from ONE per-hash pass over the distinct
     // (source, trigram-hash) projection — per-hash fan-out bounded by
     // |sources|² — affordable at audit scale, impossible at 100 TB,
-    // WHY the sketch exists. Both paths share one persisted distinct
-    // projection; everything is integer-exact, so both engines replay
+    // WHY the sketch exists. Both paths share one checkpointed
+    // per-hash pass; everything is integer-exact, so both engines replay
     // the estimator bit-for-bit.
     QueryDef("q115_source_jaccard_sketch",
       (s, dir) => {
@@ -2374,12 +2362,13 @@ object TextAnalysis {
         val uAgg = raw
           .groupBy(col("uo"))
           .agg(sort_array(collect_set(col("source"))).as("ss"))
-          .transform(graft.plans.CacheLifecycle.autoRelease)
+          .localCheckpoint()
         // sizes AND exact intersections in ONE pass over the hash
         // sets: each set emits its singles (→ |A|) and its ordered
         // pairs (→ |A∩B|, only where the set has ≥ 2 sources), one
         // map-side-combined exchange of |sources| + |pairs| groups
-        // folds both. Cached: three tiny broadcast consumers below.
+        // folds both. Checkpointed: three tiny broadcast consumers
+        // below.
         val cnt = uAgg
           .select(explode(concat(
             expr("transform(ss, a -> struct(a AS source_a," +
@@ -2390,7 +2379,7 @@ object TextAnalysis {
           .select(col("p.source_a"), col("p.source_b"))
           .groupBy(col("source_a"), col("source_b"))
           .agg(count(lit(1)).as("c"))
-          .transform(graft.plans.CacheLifecycle.autoRelease)
+          .localCheckpoint()
         val sizes = cnt.filter(col("source_b").isNull)
           .select(col("source_a").as("source"), col("c").as("n"))
         val inter = cnt.filter(col("source_b").isNotNull)
@@ -2402,7 +2391,7 @@ object TextAnalysis {
         // bounds the heap both sides of its exchange, and the roll-up
         // to arrays rides the same source partitioning. At 100 TB this
         // path runs off the distinct (source, uo) projection directly;
-        // sharing the cached audit pass is the audit-scale
+        // sharing the checkpointed audit pass is the audit-scale
         // co-optimization.
         val bkArr = uAgg
           .select(explode(col("ss")).as("source"), col("uo"))
@@ -2639,7 +2628,7 @@ object TextAnalysis {
     // 100 TB shape: ONE corpus-sized (source, a, b) histogram
     // exchange; everything downstream — the corpus bigram counts, the
     // prefix counts, the bits table, the final per-source rollup —
-    // derives from that cached histogram over the vocab²-bounded
+    // derives from that checkpointed histogram over the vocab²-bounded
     // domain; the prefix-count join broadcasts |vocab| rows.
     QueryDef("q127_bigram_surprisal",
       (s, dir) => {
@@ -2656,7 +2645,7 @@ object TextAnalysis {
           .select(col("source"), col("p.a").as("a"), col("p.b").as("b"))
           .groupBy(col("source"), col("a"), col("b"))
           .agg(count(lit(1)).as("c_sab"))
-          .transform(graft.plans.CacheLifecycle.autoRelease)
+          .localCheckpoint()
         val cab = hist.groupBy(col("a"), col("b"))
           .agg(sum(col("c_sab")).as("c_ab"))
         val ca = cab.groupBy(col("a")).agg(sum(col("c_ab")).as("c_a"))
@@ -2714,7 +2703,7 @@ object TextAnalysis {
     // distinct-VALUE histogram + cumulative window — the corpus is
     // never row-sorted, matching how the estimator itself works, and
     // the single-partition window runs over the bounded distinct-value
-    // domain, not rows. One cached 1-column projection feeds the
+    // domain, not rows. One checkpointed 1-column projection feeds the
     // bounds row (broadcast back), all four binnings (fan-out
     // multiplies an 8-byte value), and the exact pass. |est − exact| ≤
     // bin width per sweep point is the estimator's defining bound —
@@ -2724,7 +2713,7 @@ object TextAnalysis {
         import org.apache.spark.sql.expressions.Window
         val base = Tables.documents(s, dir)
           .select(size(toks).cast("long").as("nt"))
-          .transform(graft.plans.CacheLifecycle.autoRelease)
+          .localCheckpoint()
         val bounds = base.agg(min(col("nt")).as("mn"),
           max(col("nt")).as("mx"))
         val fan = base.crossJoin(broadcast(bounds))
@@ -2846,7 +2835,6 @@ object TextAnalysis {
           .select(toks.as("t")).select(explode(col("t")).as("tok"))
           .filter(char_length(col("tok")) >= 2)
           .groupBy(col("tok")).agg(count(lit(1)).as("c"))
-          .transform(graft.plans.CacheLifecycle.autoRelease)
         val best = wc
           .select(col("c"),
             explode(BPE.adjacentPairs(BPE.charSyms(col("tok")))).as("p"))
@@ -2965,7 +2953,7 @@ object TextAnalysis {
           .select(col("doc_id"),
             size(array_distinct(toks)).cast("long").as("nt"),
             col("n_chars").as("ch"))
-          .transform(graft.plans.CacheLifecycle.autoRelease)
+          .localCheckpoint()
         val g = m.groupBy(col("nt")).agg(min(col("ch")).as("mn"))
         // r13: the exclusive prefix-min over nt DESC runs as a
         // range-bucketed two-pass prefix aggregate (PartitionedPrefix)
@@ -3158,18 +3146,15 @@ object TextAnalysis {
           .select(col("doc_id"), explode(bigramsOfT).as("b"))
           .groupBy(col("doc_id"), col("b"))
           .agg(count(lit(1)).as("tf"))
-          .transform(graft.plans.CacheLifecycle.autoRelease) // df + weight scans
         val n = docs.agg(count(lit(1)).as("n"))
         val dfq = feats.groupBy(col("b")).agg(count(lit(1)).as("df"))
-        // w itself fits long (≤ tf·34 ≈ 3e5 at N=1e10) — cache and
-        // shuffle 8-byte weights; only the PRODUCTS go decimal
+        // w itself fits long (≤ tf·34 ≈ 3e5 at N=1e10) — shuffle
+        // 8-byte weights; only the PRODUCTS go decimal
         val w = feats.join(dfq, "b").crossJoin(broadcast(n))
           .select(col("doc_id"), col("b"),
             (col("tf") * length(expr("bin(n div df)"))).cast("long").as("w"))
-          .transform(graft.plans.CacheLifecycle.autoRelease) // norms + dots
         val nrm = w.groupBy(col("doc_id"))
           .agg(sum(expr("CAST(w AS DECIMAL(38,0)) * w")).as("nw"))
-          .transform(graft.plans.CacheLifecycle.autoRelease) // both cosine sides
         // explicit probe bound: first ProbeCap candidates by the
         // mix64(doc_id) permutation — a TakeOrdered over the tiny
         // candidate filter, so the broadcast stays ≤ ProbeCap
@@ -3258,7 +3243,6 @@ object TextAnalysis {
               .orderBy(col("ch"), col("doc_id"))))
           .withColumn("ns", count(lit(1)).over(
             Window.partitionBy(col("source"))))
-          .transform(graft.plans.CacheLifecycle.autoRelease)
         val nTot = m.agg(count(lit(1)).as("n_all"))
         // r13: the global CDF runs as a range-bucketed two-pass prefix
         // sum (PartitionedPrefix) — no single-partition window over
@@ -3393,7 +3377,6 @@ object TextAnalysis {
           .filter(col("nt") >= 1)
           .withColumn("nch", expr(s"IF(nt <= $C, 1L," +
             s" (nt - $C + ${S - 1}) div $S + 1)"))
-          .transform(graft.plans.CacheLifecycle.autoRelease) // doc + chunk aggs
         val docAgg = d.groupBy(col("source"))
           .agg(count(lit(1)).as("n_docs"), sum(col("nt")).as("nt_sum"))
         d.select(col("source"), col("doc_id"), col("t"), col("nt"),

@@ -507,7 +507,7 @@ object VideoAnalytics {
     // audience-overlap / q134 wedge kernel: ≤ C(|classes|, 2) rows
     // per frame, no frame-keyed self-join — the former self-join paid
     // a second exchange plus a per-frame quadratic probe). Supports
-    // and the frame total are projections of the SAME persisted
+    // and the frame total are projections of the SAME checkpointed
     // per-frame fold. Pair groupBy stays bounded by 80². Lift in
     // DECIMAL(38,0): n_ab·n_frames·10⁶ overflows int64 on a 100 TB
     // frame count.
@@ -517,7 +517,7 @@ object VideoAnalytics {
           .filter(col("confidence") >= 0.5)
           .groupBy(col("frame_id"))
           .agg(sort_array(collect_set(col("object_class"))).as("cs"))
-          .transform(graft.plans.CacheLifecycle.autoRelease)
+          .localCheckpoint()
         val sup = fsets.select(explode(col("cs")).as("object_class"))
           .groupBy(col("object_class")).agg(count(lit(1)).as("nc"))
         val nf = fsets.agg(count(lit(1)).as("n_frames"))

@@ -1,81 +1,56 @@
 package graft.plans
 
-import java.util.concurrent.ConcurrentHashMap
+import org.apache.spark.sql.DataFrame
 
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.util.QueryExecutionListener
-
-/** Engine-owned cache lifecycle for the intermediate tables the
-  * operator library persists (signature tables, posting indexes,
-  * histograms, centroid tables): `autoRelease(df)` persists `df` and
-  * unpersists it automatically after the first completed action that
-  * read the cache — so library callers no longer own a
-  * caller-must-clearCache contract, and a one-action consumer (the
-  * overwhelmingly common shape: every `queries()` entry is consumed
-  * by exactly one write/collect) leaves ZERO cache entries behind.
+/** The one materialization contract for the intermediates the
+  * operator library shares between branches (signature tables,
+  * quantized corpora, pair lists, histograms).
   *
-  * Mechanism: a per-session QueryExecutionListener walks each
-  * completed action's physical plan (descending into AQE subplans and
-  * into the cached plans of in-memory scans — nested caches release
-  * together) collecting the cache-builder identity of every cache
-  * entry the action consumed (GraftSqlBridge.consumedCacheBuilders);
-  * tracked frames whose builder appears are unpersisted. The builder
-  * is the stable identity of a cache entry across plan copies, which
-  * makes the match exact — unrelated caches (a user's own persists,
-  * the connected-components edge table) are never touched.
+  * By default an intermediate is NOT materialized: a frame consumed by
+  * several branches of one plan stays a plain subtree, and AQE
+  * exchange reuse computes any shared exchange once. Where a measured
+  * number says the recomputation costs more than sharing, the frame
+  * is cut with `Dataset.localCheckpoint()` (directly, or through
+  * [[materializeSpread]]):
   *
-  * Semantics under multiple actions: the FIRST consuming action
-  * releases the cache, so a second action on the same returned frame
-  * recomputes — correct, just uncached. That is the right trade for
-  * these generators: their caches exist to share ONE pass across the
-  * branches of ONE query plan, not to serve repeated actions. Callers
-  * that want repeat-action caching should persist the RESULT
-  * themselves, not the engine's intermediates.
+  *  - eager: the checkpoint runs as its own job while the DataFrame is
+  *    BUILT, so construction executes work (explain-only tooling pays
+  *    it too) and every later consumer reads finished blocks — the
+  *    logical plan is truncated to a `LogicalRDD`, so no consumer
+  *    re-optimizes or re-runs the lineage;
+  *  - reclaimed by the ContextCleaner: the blocks live as long as the
+  *    returned frame is reachable and are removed after it is
+  *    garbage-collected — nothing registers in the SQL cache, and no
+  *    caller owes an unpersist or a `clearCache`;
+  *  - not replicated: the blocks sit on the executor that computed
+  *    them, so losing that executor (dynamic deallocation, a crash)
+  *    loses the checkpoint, and a later action on the frame fails
+  *    instead of recomputing. In local mode the driver is the only
+  *    executor; on a cluster the frame must be consumed while its
+  *    executors live.
   *
-  * Iterative callers stay safe by construction: connectedComponents'
-  * internal actions fire the listener, but its edge table and label
-  * generations are managed manually (persist/unpersist in-loop) and
-  * never tracked here — only the upstream signature caches release
-  * when the first CC action materializes the edge table through them,
-  * which is exactly when they stop being needed.
-  *
-  * Listener events are delivered asynchronously (Spark's listener
-  * bus), so release happens shortly after the action returns; a
-  * racing second action at worst recomputes. The registry holds
-  * strong references until release; an entry whose frame is never
-  * executed holds only the unmaterialized plan (persist is lazy — no
-  * blocks exist to leak). The same applies to an action whose
-  * OPTIMIZED plan never touches the cache — e.g. a bare count() over
-  * aggregate-backed outer joins, which Catalyst eliminates wholesale:
-  * nothing was consumed, nothing materialized, and the entry stays
-  * pending (zero blocks) until a real consumer arrives. Runtime
-  * re-planning is the one case where a cache can materialize and then
-  * vanish from the final plan (AQE empty-relation propagation drops a
-  * join branch whose stage came back empty) — the release walk covers
-  * it by walking adaptive nodes' inputPlan as well as executedPlan
-  * (GraftSqlBridge.consumedCacheBuilders).
+  * A frame may stay plain only when recomputing it per branch yields
+  * the same rows in every branch: its analyzed plan is deterministic
+  * and any `row_number`/`rank` inside it orders on a unique key.
+  * Otherwise it is checkpointed.
   */
 object CacheLifecycle {
-
-  private val sessions =
-    new ConcurrentHashMap[SparkSession, ConcurrentHashMap[AnyRef, DataFrame]]()
 
   /** Eagerly materialize an expensive generator table ONCE, spread
     * across the session's full parallelism, for plans whose branches
     * consume it CONCURRENTLY (AQE submits every leaf exchange job at
     * the same time).
     *
-    * Why not [[autoRelease]] (lazy persist) for these: a lazy cache is
-    * built by whichever task first computes each partition — when N
-    * concurrent AQE stage jobs all scan the not-yet-built cache, every
-    * one of them pays the full generator pass (measured r12: the
-    * multi-signal mine ran 6–14 parallel single-task stages of
-    * 0.85–1.0 s each, all recomputing/lock-waiting the same signature
-    * partition; wall cost ≈ one full SERIAL generator pass per query,
-    * per the BlockManager "already exists; not re-adding" races).
-    * Checkpointing first runs the generator exactly once, as its own
-    * job, before any consumer exists.
+    * Why eager: a lazy cache is built by whichever task first
+    * computes each partition — when N concurrent AQE stage jobs all
+    * scan a not-yet-built cache, every one of them pays the full
+    * generator pass (measured r12: the multi-signal mine ran 6–14
+    * parallel single-task stages of 0.85–1.0 s each, all
+    * recomputing/lock-waiting the same signature partition; wall cost
+    * ≈ one full SERIAL generator pass per query, per the BlockManager
+    * "already exists; not re-adding" races). Checkpointing first runs
+    * the generator exactly once, as its own job, before any consumer
+    * exists.
     *
     * Why the spread: generator inputs are typically a narrow
     * projection of a table scan, and parquet cannot split below a row
@@ -85,14 +60,12 @@ object CacheLifecycle {
     * scan's partition count is below the session's default
     * parallelism, one round-robin repartition of the (narrow) input
     * spreads the kernel work across all cores. The condition is
-    * data-derived: at deployment scale a corpus scan has thousands of
-    * splits and the repartition (and its shuffle) simply never
-    * happens; production pipelines additionally persist signature
-    * tables at ingest, making this a test/bench-regime path only.
-    *
-    * Lifecycle: localCheckpoint blocks are reclaimed by the
-    * ContextCleaner when the returned frame is garbage-collected
-    * (the connectedComponents label-generation contract).
+    * data-derived, not a regime switch: a scan with fewer splits than
+    * cores (small files, or a few large row groups at any size) is
+    * repartitioned, and that shuffle moves every column of `input` —
+    * the raw text included — once. Callers therefore pass the
+    * narrowest projection their kernel reads. Production pipelines
+    * persist signature tables at ingest instead.
     */
   def materializeSpread(mk: DataFrame => DataFrame)(input: DataFrame)
       : DataFrame = {
@@ -107,48 +80,5 @@ object CacheLifecycle {
       if (input.rdd.getNumPartitions < target) input.repartition(target)
       else input
     mk(spread).localCheckpoint()
-  }
-
-  /** Persist `df` and release its cache after the first completed
-    * action that reads it. Returns `df` for chaining (fits
-    * `.transform(CacheLifecycle.autoRelease)`).
-    */
-  def autoRelease(df: DataFrame): DataFrame = {
-    df.persist()
-    val spark = df.sparkSession
-    val registry = sessions.computeIfAbsent(spark, s => {
-      s.listenerManager.register(new ReleaseListener(s))
-      new ConcurrentHashMap[AnyRef, DataFrame]()
-    })
-    GraftSqlBridge.cacheBuilderOf(df).foreach(b => registry.put(b, df))
-    df
-  }
-
-  private final class ReleaseListener(spark: SparkSession)
-      extends QueryExecutionListener {
-    private def release(qe: QueryExecution): Unit = {
-      val registry = sessions.get(spark)
-      if (registry != null && !registry.isEmpty) {
-        // executedPlan can throw for a query that failed analysis;
-        // nothing was consumed in that case
-        val used =
-          try GraftSqlBridge.consumedCacheBuilders(qe)
-          catch { case _: Throwable => new java.util.HashSet[AnyRef]() }
-        if (!used.isEmpty) {
-          val it = registry.entrySet().iterator()
-          while (it.hasNext) {
-            val e = it.next()
-            if (used.contains(e.getKey)) {
-              it.remove()
-              e.getValue.unpersist(blocking = false)
-            }
-          }
-        }
-      }
-    }
-    override def onSuccess(funcName: String, qe: QueryExecution,
-        durationNs: Long): Unit = release(qe)
-    override def onFailure(funcName: String, qe: QueryExecution,
-        exception: Exception): Unit = release(qe)
   }
 }

@@ -81,13 +81,13 @@ object PartitionedPrefix {
     * the first row) — q137's dominance frame.
     *
     * `df` is consumed by several branches (partials self-join + the
-    * final windowed frame) but is NOT cached here: every call site's
-    * `df` is an aggregate ending in its own exchange, and AQE's
+    * final windowed frame) but is NOT materialized here: every call
+    * site's `df` is an aggregate ending in its own exchange, and AQE's
     * stage reuse computes that shuffle once for all canonically-equal
-    * consumers — an `autoRelease` persist measured ~0.2 s/task of
-    * pure InMemoryRelation build overhead on the bench's tiny frames
-    * and would hold histogram-sized executor memory at scale for
-    * nothing the exchange files don't already provide.
+    * consumers — a lazy persist measured ~0.2 s/task of pure
+    * InMemoryRelation build overhead on the bench's tiny frames and
+    * would hold histogram-sized executor memory at scale for nothing
+    * the exchange files don't already provide.
     */
   def cumulative(df: DataFrame, key: String, desc: Boolean = false,
       sums: Seq[(String, String)] = Nil,

@@ -1,15 +1,13 @@
 package graft
 
 import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The engine owns its intermediate-cache lifecycle: queries that
-  * persist() signature tables / posting indexes / histograms must
-  * leave ZERO SQL-cache entries behind after a single consuming
-  * action, with NO caller-side clearCache — the library-user contract
-  * (Verify/Bench additionally clearCache per pass, but a plain
-  * consumer of the API must not leak).
+/** The engine shares intermediates through plain plans or eager
+  * `localCheckpoint`s (graft.plans.CacheLifecycle), never through the
+  * SQL cache: a consumer of the API runs a query and owes no
+  * `clearCache` — a single action leaves ZERO SQL-cache entries behind.
+  * A stray `persist()` in an operator shows up here as a live entry.
   */
 class CacheLifecycleSpec extends AnyFunSuite {
 
@@ -21,30 +19,15 @@ class CacheLifecycleSpec extends AnyFunSuite {
 
   private val sf = "/root/testdata/sf0.001"
 
-  /** Listener delivery is async — poll until the cache registry
-    * drains (or fail after ~15 s).
-    */
-  private def awaitCacheEmpty(context: String): Unit = {
-    val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
-    while (!GraftSqlBridge.sqlCacheIsEmpty(spark)
-        && System.nanoTime() < deadline)
-      Thread.sleep(50)
+  private def assertCacheEmpty(context: String): Unit =
     assert(GraftSqlBridge.sqlCacheIsEmpty(spark),
       s"$context left SQL-cache entries behind:\n" +
         GraftSqlBridge.cachedPlanHeadlines(spark).mkString("\n"))
-  }
 
-  // Queries whose plans persist engine intermediates: q42 (minhash
-  // signature table), q46 (shingle index + posting table — a cache
-  // built over a cache), q48 (shingled-docs contamination split), q66
-  // (source×token tf table), q86 (pinned length histogram), q53
-  // (LSH bucket table), q88 (centroid table), q29 (distinct
-  // frame-class frame), q89 (shared signature scan), q71 (triple
-  // signature table + CC-internal actions), q96 (triple signature
-  // table through the savings report), q97 (sig+bands+hl calibration
-  // signature table), q101/q102 (distinct-trigram pass). q103 stays
-  // in the list as a stays-cache-free guard: its single-pass window
-  // shape (round 12) persists nothing at all.
+  // Queries whose plans share engine intermediates between branches
+  // (signature tables, posting indexes, histograms, centroid tables,
+  // pair lists), plus the connected-components callers (q71, q96),
+  // whose in-loop edge persists must be gone when the action returns.
   for (q <- Seq("q42_minhash_lsh_pairs", "q46_ngram_jaccard_pairs",
       "q48_contamination_check", "q66_distinctive_terms",
       "q86_length_drift", "q53_ann_lsh", "q88_label_confusion",
@@ -61,46 +44,19 @@ class CacheLifecycleSpec extends AnyFunSuite {
       "q130_lsh_radius_sweep"))
     test(s"$q releases every engine cache after one action, no clearCache") {
       spark.catalog.clearCache() // clean slate from other suites
-      // collect(), not count(): count references no columns, so the
-      // optimizer may eliminate aggregate-backed outer-join branches
-      // wholesale (observed on q126 — the caches were never consumed,
-      // never materialized, and correctly stayed pending). The
-      // contract under test is "released after the first action that
-      // READS the cache", so the probe action must read real columns.
       val n = SparkEntry.queries(q)(spark, sf).collect().length
       assert(n >= 0)
-      awaitCacheEmpty(q)
+      assertCacheEmpty(q)
     }
-
-  test("a caller's own persist is never touched by the engine's release") {
-    spark.catalog.clearCache()
-    val mine = spark.read.parquet(s"$sf/region.parquet").persist()
-    assert(mine.count() > 0)
-    // run a cache-heavy engine query to completion
-    SparkEntry.queries("q42_minhash_lsh_pairs")(spark, sf).count()
-    val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
-    while (!GraftSqlBridge.sqlCacheIsEmpty(spark)
-        && System.nanoTime() < deadline) {
-      // engine caches drain; the user's entry must remain
-      Thread.sleep(50)
-    }
-    assert(!GraftSqlBridge.sqlCacheIsEmpty(spark),
-      "user persist must survive the engine's auto-release")
-    assert(GraftSqlBridge.cacheBuilderOf(mine).nonEmpty,
-      "the surviving entry must be the caller's own")
-    mine.unpersist()
-    awaitCacheEmpty("user unpersist")
-  }
 
   test("auto-released caches still share the pass within the one action (result correctness)") {
     spark.catalog.clearCache()
-    // same result with and without the release having happened before
-    val a = SparkEntry.queries("q42_minhash_lsh_pairs")(spark, sf)
+    def run() = SparkEntry.queries("q42_minhash_lsh_pairs")(spark, sf)
       .collect().map(_.toSeq).sortBy(_.toString()).toSeq
-    awaitCacheEmpty("first q42 action")
-    val b = SparkEntry.queries("q42_minhash_lsh_pairs")(spark, sf)
-      .collect().map(_.toSeq).sortBy(_.toString()).toSeq
+    val a = run()
+    assertCacheEmpty("first q42 action")
+    val b = run()
     assert(a === b)
-    awaitCacheEmpty("second q42 action")
+    assertCacheEmpty("second q42 action")
   }
 }
