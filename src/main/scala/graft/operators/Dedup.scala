@@ -608,51 +608,37 @@ object Dedup {
     }
   }
 
-  /** Default row gate for [[gatedBroadcast]]: ~1M rows of narrow
-    * (id, id)/(id, count) tuples is tens of MB serialized — well
-    * inside a safe BroadcastExchange, far above anything this corpus
-    * produces. A 100 TB web corpus at realistic 30-50% dup rates
-    * blows past it by orders of magnitude, which is the point: the
-    * gate trips and the join falls back to a plain shuffle.
+  /** The planner's own broadcast rule, fed the row count it lacks:
+    * broadcast iff `rows × EstimationUtils.getSizePerRow(output)` is
+    * within `spark.sql.autoBroadcastJoinThreshold` and that threshold
+    * is positive. Near-dup membership/pair/label tables are bounded by
+    * the pair GRAPH, not the corpus — dimension-like at this corpus's
+    * benign dup rate, a corpus FRACTION at realistic web rates (30-50%
+    * of docs in some near-dup pair). Their static size estimate is
+    * the origin plan's even through a localCheckpoint, so the planner
+    * picks sort-merge, and AQE converts to a broadcast only after the
+    * corpus side's exchange has already run. A measured count fixes
+    * that; a blind `broadcast()` would not: it is a driver-side
+    * collect with a hard size ceiling, and the hint overrides even
+    * `-1`, the one switch that must force the shuffle shapes.
     */
-  private[graft] val BroadcastRowGate = 1L << 20
-
-  /** Broadcast iff MEASURED small. Near-dup membership/pair/label
-    * tables are bounded by the pair GRAPH, not the corpus — at this
-    * corpus's benign dup rate that is dimension-like and broadcast is
-    * the right plan, but at realistic web-corpus rates (30-50% of
-    * docs in some near-dup pair) the pair graph is a corpus FRACTION,
-    * and a forced `broadcast()` is a driver-side BroadcastExchange
-    * collect with a hard size ceiling that AQE cannot override
-    * (round-10 verdict task 3). So: materialize once (localCheckpoint
-    * — the join reuses the checkpointed blocks, making the measuring
-    * count a cheap scan, not a recompute; pass `materialize = false`
-    * for frames a caller already checkpointed), count, and hint
-    * broadcast only under `maxRows`; above the gate the frame joins
-    * unhinted on its key and the planner/AQE picks sort-merge or
-    * shuffled-hash. Both shapes are pinned in PairsStoreSpec.
-    */
-  private[graft] def gatedBroadcast(df: org.apache.spark.sql.DataFrame,
-      maxRows: Long = BroadcastRowGate, materialize: Boolean = true)
-      : org.apache.spark.sql.DataFrame = {
-    val snap = if (materialize) df.localCheckpoint() else df
-    if (snap.count() <= maxRows) broadcast(snap) else snap
+  private def fitsBroadcast(df: org.apache.spark.sql.DataFrame,
+      rows: Long): Boolean = {
+    val qe = df.queryExecution
+    val limit = qe.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    limit > 0 && BigInt(rows) * org.apache.spark.sql.catalyst.plans.logical
+      .statsEstimation.EstimationUtils.getSizePerRow(qe.analyzed.output) <= limit
   }
 
-  /** [[gatedBroadcast]] with the row count supplied by the CALLER —
-    * for frames whose cardinality is knowable from a cheaper,
-    * already-materialized surrogate (q73: |keepers| ≡ |components|,
-    * countable on the checkpointed label table), so the gate never
-    * executes the expensive branch just to measure it (round-11
-    * advice: a materialize=false gate on an un-checkpointed branch
-    * re-runs that branch once per measurement). The frame itself
-    * stays un-materialized IN the consumer plan — the shape
-    * PlanSpec's operator pins require.
+  /** `df` hinted broadcast iff [[fitsBroadcast]]; otherwise it joins
+    * unhinted on its key and the planner/AQE picks sort-merge or
+    * shuffled-hash. `rows` is a count the caller already took, or an
+    * upper bound on it from a cheaper materialized surrogate. Both
+    * shapes are pinned in PairsStoreSpec and FinalCutSpec.
     */
-  private[graft] def gatedBroadcastAt(df: org.apache.spark.sql.DataFrame,
-      measuredRows: Long, maxRows: Long = BroadcastRowGate)
-      : org.apache.spark.sql.DataFrame =
-    if (measuredRows <= maxRows) broadcast(df) else df
+  private[graft] def broadcastIfSmall(df: org.apache.spark.sql.DataFrame,
+      rows: Long): org.apache.spark.sql.DataFrame =
+    if (fitsBroadcast(df, rows)) broadcast(df) else df
 
   /** Per-doc SOFT-DEDUP sampling weight over any (doc_id, ...) frame
     * and near-dup pair list: members of a component get weight
@@ -668,27 +654,24 @@ object Dedup {
     * never re-mines. Appends the `wppm` column; the label/size tables
     * are bounded by the pair graph — dimension-like at THIS corpus's
     * dup rate, a corpus fraction at realistic web rates — so they go
-    * through [[gatedBroadcast]]: measured-small sides broadcast (the
+    * through [[broadcastIfSmall]]: measured-small sides broadcast (the
     * input frame never shuffles), oversize sides fall back to plain
     * equi-joins and the input shuffles once on doc_id.
     */
   def softDedupWeights(docs: org.apache.spark.sql.DataFrame,
-      pairs: org.apache.spark.sql.DataFrame,
-      broadcastGate: Long = BroadcastRowGate)
+      pairs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     val comp = connectedComponents(pairs)
-    // ONE measurement gates BOTH small sides: |sizes| ≤ |mem| = the
+    // ONE count sizes BOTH small sides: |sizes| ≤ |mem| = the
     // member count, and comp is already localCheckpoint-ed inside CC,
     // so the count is a cheap block scan — no extra materialization
-    // per gated side (the broadcast exchanges rebuild only the tiny
-    // aggregates over the checkpointed labels).
+    // per broadcast side (the broadcast exchanges rebuild only the
+    // tiny aggregates over the checkpointed labels).
     val nMembers = comp.count()
-    def gated(df: org.apache.spark.sql.DataFrame) =
-      if (nMembers <= broadcastGate) broadcast(df) else df
     val sizes = comp.groupBy(col("lbl")).agg(count(lit(1)).as("csz"))
-    val mem = comp.join(gated(sizes), "lbl")
+    val mem = comp.join(broadcastIfSmall(sizes, nMembers), "lbl")
       .select(col("id").as("doc_id"), col("csz"))
-    docs.join(gated(mem), Seq("doc_id"), "left")
+    docs.join(broadcastIfSmall(mem, nMembers), Seq("doc_id"), "left")
       .withColumn("wppm",
         when(col("csz").isNull, lit(1000000L))
           .otherwise(expr(
@@ -884,25 +867,27 @@ object Dedup {
       .orderBy(col("source"))
   }
 
+  /** The held-out eval source of q156/q157's decontamination. */
+  private val EvalSource = "src0"
+
   /** Shared decontamination kernel (q156/q157): over a
     * localCheckpoint-ed (doc_id, source, nt, sh) projection and the
     * near-dup component labels, returns (direct, reached) — direct =
-    * non-`evalSource` docs whose distinct 5-gram shingles are ≥ 20%
-    * contained in the `evalSource` shingle set (q48's threshold,
+    * non-[[EvalSource]] docs whose distinct 5-gram shingles are ≥ 20%
+    * contained in the [[EvalSource]] shingle set (q48's threshold,
     * probed in the decontamination direction); reached = every member
     * of a component containing a seed (eval doc ∪ direct doc) —
     * transitive paraphrase chains, not one hop. Every graph-side
-    * table is eval- or pair-graph-bounded and joins through the
-    * measured gate; `direct` comes back localCheckpoint-ed (two
-    * consumers — seed union + report back-join — each behind its own
-    * gate measurement).
+    * table is eval- or pair-graph-bounded and joins through
+    * [[broadcastIfSmall]]; `direct` comes back localCheckpoint-ed (two
+    * consumers — seed union + report back-join — each sized by the
+    * one count of it).
     */
   private def contaminationFlags(docs: org.apache.spark.sql.DataFrame,
-      comp: org.apache.spark.sql.DataFrame, evalSource: String,
-      gate: Long = BroadcastRowGate)
+      comp: org.apache.spark.sql.DataFrame)
       : (org.apache.spark.sql.DataFrame, Long,
          org.apache.spark.sql.DataFrame, Long) = {
-    // r12 probe shape: under the broadcast gate the eval shingle set
+    // r12 probe shape: when the eval shingle set fits a broadcast it
     // travels as ONE sorted array row and each train doc's overlap is
     // a sorted-merge (graft_sorted_overlap, req 0 = exact intersection
     // count) — the explode-every-train-shingle → broadcast-join →
@@ -912,16 +897,17 @@ object Dedup {
     // and n_ngrams = size(sh) are exactly the exploded formulation's
     // counts (sh is DISTINCT sorted by the graft_shingle_hashes
     // contract; empty-text docs carry the 1-element hash-of-"" array,
-    // so no doc row vanishes or divides by zero). Above the gate the
-    // original explode + plain equi-join runs unchanged — same
-    // fallback honesty as every other measured gate; both shapes are
-    // spec-pinned equal (FinalCutSpec's gate-shape equivalence test).
-    val evalSh = docs.filter(col("source") === evalSource)
+    // so no doc row vanishes or divides by zero). Otherwise the
+    // original explode + plain equi-join runs unchanged — the same
+    // fitsBroadcast rule that sizes every other broadcast here; both
+    // shapes are spec-pinned equal (FinalCutSpec's shape equivalence
+    // test).
+    val evalSh = docs.filter(col("source") === EvalSource)
       .select(explode(col("sh")).as("s")).distinct()
       .localCheckpoint()
     val nEvalSh = evalSh.count()
-    val train = docs.filter(col("source") =!= evalSource)
-    val direct = (if (nEvalSh <= gate) {
+    val train = docs.filter(col("source") =!= EvalSource)
+    val direct = (if (fitsBroadcast(evalSh, nEvalSh)) {
       val evalArr = evalSh.agg(sort_array(collect_list(col("s"))).as("ev"))
       train.select(col("doc_id"), col("sh"))
         .join(broadcast(evalArr))
@@ -937,23 +923,23 @@ object Dedup {
         .filter(col("n_matched") * 5 >= col("n_ngrams"))
         .select(col("doc_id"))
     }).localCheckpoint()
-    // ONE count per materialized table; every graph-side gate below
-    // rides a surrogate bound instead of its own measuring action
-    // (|seeds| ≤ |eval docs| + |direct|, |badLbl| ≤ |comp|,
-    // |reached| ≤ |comp|) — gatedBroadcastAt keeps the frames lazy in
-    // the consumer plan, and an upper-bound gate only ever falls back
-    // EARLIER than an exact one (the conservative direction).
+    // ONE count per materialized table; every graph-side join below
+    // is sized by a surrogate bound instead of its own measuring
+    // action (|seeds| ≤ |eval docs| + |direct|, |badLbl| ≤ |comp|,
+    // |reached| ≤ |comp|) — the frames stay lazy in the consumer
+    // plan, and an upper bound only ever falls back to the shuffle
+    // EARLIER than an exact count (the conservative direction).
     val nDirect = direct.count()
-    val nEvalDocs = docs.filter(col("source") === evalSource).count()
+    val nEvalDocs = docs.filter(col("source") === EvalSource).count()
     val nComp = comp.count()
-    val seeds = docs.filter(col("source") === evalSource)
+    val seeds = docs.filter(col("source") === EvalSource)
       .select(col("doc_id")).union(direct)
     val badLbl = comp
-      .join(gatedBroadcastAt(seeds, nEvalDocs + nDirect, gate),
+      .join(broadcastIfSmall(seeds, nEvalDocs + nDirect),
         col("id") === col("doc_id"))
       .select(col("lbl")).distinct()
     val reached = comp
-      .join(gatedBroadcastAt(badLbl, nComp, gate), Seq("lbl"))
+      .join(broadcastIfSmall(badLbl, nComp), Seq("lbl"))
       .select(col("id").as("doc_id"), lit(1).as("r"))
     (direct, nDirect, reached, nComp)
   }
@@ -968,8 +954,8 @@ object Dedup {
     * frames are narrow projections of the same checkpointed blocks.
     *
     * localCheckpoint (via materializeSpread), not a plain subtree: the
-    * consumers sit ACROSS the broadcast gates' measuring actions, and
-    * a plain frame would re-run the corpus scan and every signature
+    * consumers sit ACROSS the counts that size the broadcasts, and a
+    * plain frame would re-run the corpus scan and every signature
     * kernel in each of those actions.
     *
     * Returns (shingled, sigs): shingled = (doc_id, source, nt, sh
@@ -1014,20 +1000,18 @@ object Dedup {
     * shape.
     */
   private[graft] def dupAwareDecontaminationFrom(
-      docsIn: org.apache.spark.sql.DataFrame,
-      evalSource: String = "src0",
-      gate: Long = BroadcastRowGate): org.apache.spark.sql.DataFrame = {
+      docsIn: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     // one corpus scan + one checkpoint feeds the probe projection AND
     // the miners (r13 — was two scans + two checkpoints)
     val (docs, sigs) = fusedSigShingleDocs(docsIn)
     val comp = connectedComponents(multiSignalPairsFromSigs(sigs))
     val (direct, nDirect, reached, nComp) =
-      contaminationFlags(docs, comp, evalSource, gate)
-    docs.filter(col("source") =!= evalSource)
+      contaminationFlags(docs, comp)
+    docs.filter(col("source") =!= EvalSource)
       .select(col("doc_id"), col("source"), col("nt"))
-      .join(gatedBroadcastAt(direct.withColumn("d", lit(1)), nDirect, gate),
+      .join(broadcastIfSmall(direct.withColumn("d", lit(1)), nDirect),
         Seq("doc_id"), "left")
-      .join(gatedBroadcastAt(reached, nComp, gate), Seq("doc_id"), "left")
+      .join(broadcastIfSmall(reached, nComp), Seq("doc_id"), "left")
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(when(col("d").isNotNull, 1L).otherwise(0L))
@@ -1052,7 +1036,7 @@ object Dedup {
     * first-failing-gate attribution in the order a careful recipe
     * applies the gates —
     *   1. `contaminated`  — [[contaminationFlags]]: direct n-gram
-    *      overlap with the `evalSource` set OR a near-dup component
+    *      overlap with the [[EvalSource]] set OR a near-dup component
     *      containing a seed (decontamination runs FIRST: a
     *      contaminated keeper must fall here, not survive as `dup`'s
     *      elected representative);
@@ -1071,26 +1055,24 @@ object Dedup {
     *
     * 100 TB shape: ONE mining pass feeds both graph gates (the q145
     * store in production); every graph-side table (direct, reached,
-    * comp) is eval- or pair-graph-bounded and rides the measured
-    * gate — under it the corpus is probed by broadcast LEFT joins and
-    * never shuffles for them; over it they fall back to doc_id
-    * equi-joins under AQE. The quality gate is the q45 two-level
-    * hash aggregation ((doc, bigram) then doc, both map-side
-    * partial); source/nt ride through its shuffles so no extra
-    * corpus join is paid. The census is |sources| × 6 rows; the
+    * comp) is eval- or pair-graph-bounded and joins through
+    * [[broadcastIfSmall]] — when it fits, the corpus is probed by
+    * broadcast LEFT joins and never shuffles for them; otherwise they
+    * fall back to doc_id equi-joins under AQE. The quality gate is
+    * the q45 two-level hash aggregation ((doc, bigram) then doc, both
+    * map-side partial); source/nt ride through its shuffles so no
+    * extra corpus join is paid. The census is |sources| × 6 rows; the
     * source-total window runs on that tiny frame, not the corpus.
     */
   private[graft] def finalCutManifestFrom(
-      docsIn: org.apache.spark.sql.DataFrame,
-      evalSource: String = "src0",
-      gate: Long = BroadcastRowGate): org.apache.spark.sql.DataFrame = {
+      docsIn: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     // one corpus scan + one checkpoint feeds the probe projection,
     // the miners AND the quality gate's bigram census (r13 — was
     // three corpus scans: two spread checkpoints + the census scan)
     val (docs, sigs) = fusedSigShingleDocs(docsIn)
     val comp = connectedComponents(multiSignalPairsFromSigs(sigs))
     val (direct, nDirect, reached, nComp) =
-      contaminationFlags(docs, comp, evalSource, gate)
+      contaminationFlags(docs, comp)
     // r12: the quality gate's two-level bigram aggregation (explode →
     // groupBy(doc,…,bg) → groupBy(doc,…)) shuffled one row per bigram
     // occurrence and hash-aggregated |docs|×|distinct bigrams| groups
@@ -1099,21 +1081,21 @@ object Dedup {
     // the serial Generate stage the raw one-split scan produced).
     // Null/short texts yield (0, 0) exactly as explode_outer +
     // count(bg) did. r13: the census rides the fused checkpoint.
-    val base = docs.filter(col("source") =!= evalSource)
+    val base = docs.filter(col("source") =!= EvalSource)
       .select(col("doc_id"), col("source"), col("nt"),
         col("nbg"), col("topc"))
     val u = TextAnalysis.unsignedDec(
       call_function("graft_mix64", col("doc_id")))
     val two64 = TextAnalysis.two64
     val lab = base
-      // r12: all three graph-side gates ride the counts
-      // contaminationFlags already measured (|reached| ≤ |comp| — the
-      // upper-bound-gate direction is the conservative one), so no
-      // gate here spends its own measuring job
-      .join(gatedBroadcastAt(direct.withColumn("d", lit(1)), nDirect, gate),
+      // r12: all three graph-side joins are sized by the counts
+      // contaminationFlags already took (|reached| ≤ |comp| — the
+      // upper bound is the conservative direction), so none of them
+      // spends its own measuring job
+      .join(broadcastIfSmall(direct.withColumn("d", lit(1)), nDirect),
         Seq("doc_id"), "left")
-      .join(gatedBroadcastAt(reached, nComp, gate), Seq("doc_id"), "left")
-      .join(gatedBroadcastAt(comp, nComp, gate),
+      .join(broadcastIfSmall(reached, nComp), Seq("doc_id"), "left")
+      .join(broadcastIfSmall(comp, nComp),
         col("doc_id") === col("id"), "left")
       .withColumn("u", u)
       .withColumn("status",
@@ -1768,9 +1750,9 @@ object Dedup {
     // The keepers table is one row per COMPONENT — smaller than the
     // membership, but component count is still pair-graph-bounded
     // (a corpus fraction at realistic web dup rates), so the
-    // back-join goes through the measured gatedBroadcast: broadcast
-    // when small, plain lbl-keyed equi-join when not (both sides of
-    // that join are graph-bounded, never the corpus).
+    // back-join goes through broadcastIfSmall: broadcast when the
+    // measured rows fit, plain lbl-keyed equi-join when not (both
+    // sides of that join are graph-bounded, never the corpus).
     QueryDef("q73_dedup_keepers",
       (s, dir) => {
         graft.plans.TopK.ensure(s)
@@ -1791,15 +1773,15 @@ object Dedup {
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") === 1)
           .select(col("lbl"), col("doc_id").as("keeper_id"))
-        // the gate's measurement: |keepers| ≡ |components|, counted
-        // on the CHECKPOINTED label table (comp is localCheckpoint-ed
-        // inside CC — a cheap block-scan agg), never by executing the
-        // keepers branch itself (a plain gatedBroadcast here would
-        // re-run the corpus-side scoring join once per measurement —
+        // the broadcast's row count: |keepers| ≡ |components|,
+        // counted on the CHECKPOINTED label table (comp is
+        // localCheckpoint-ed inside CC — a cheap block-scan agg),
+        // never by executing the keepers branch itself (counting
+        // keepers would re-run the corpus-side scoring join —
         // round-11 advice); keepers' TopKPerKey subtree stays IN the
         // consumer plan (PlanSpec pins the bounded operator)
         val nComponents = comp.select(col("lbl")).distinct().count()
-        scored.join(gatedBroadcastAt(keepers, nComponents),
+        scored.join(broadcastIfSmall(keepers, nComponents),
           Seq("lbl"))
           .select(col("doc_id"), col("keeper_id"),
             (col("doc_id") === col("keeper_id")).as("is_keeper"))
@@ -2066,11 +2048,11 @@ object Dedup {
     // because they need the labels). The membership list is
     // pair-graph-bounded — much smaller than the corpus at THIS
     // corpus's dup rate, but a corpus FRACTION at realistic web
-    // rates (30-50% of docs in some pair) — so it goes through the
-    // measured gatedBroadcast: small lists broadcast onto the
-    // two-column (doc_id, source) projection (the corpus side never
-    // shuffles), oversize lists fall back to a plain doc_id equi-join
-    // under AQE. Totals are one map-side-combined groupBy on the same
+    // rates (30-50% of docs in some pair) — so it is checkpointed,
+    // counted and joined through broadcastIfSmall: small lists
+    // broadcast onto the two-column (doc_id, source) projection (the
+    // corpus side never shuffles), oversize lists fall back to a
+    // plain doc_id equi-join under AQE. Totals are one map-side-combined groupBy on the same
     // projection; the per-source rate table is genuinely dimension-
     // sized (≤ |sources| rows) and stays force-broadcast. dup_ppm is
     // integer half-up — no float rates.
@@ -2080,8 +2062,9 @@ object Dedup {
           .select(col("doc_id"), col("source"))
         val members = multiSignalPairs(s, dir)
           .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
-          .distinct()
-        val dup = src.join(gatedBroadcast(members), Seq("doc_id"))
+          .distinct().localCheckpoint()
+        val dup = src.join(broadcastIfSmall(members, members.count()),
+            Seq("doc_id"))
           .groupBy(col("source")).agg(count(lit(1)).as("n_dup0"))
         src.groupBy(col("source")).agg(count(lit(1)).as("n_docs"))
           .join(broadcast(dup), Seq("source"), "left")
@@ -2390,7 +2373,7 @@ object Dedup {
     // signature set back onto the chunk table, but that set scales
     // with corpus dup content (billions of rows at realistic 30-50%
     // web dup rates — the round-10 argument that retired q87/q151/
-    // q152's forced hints), and even the measured gatedBroadcast
+    // q152's forced hints), and even a measured broadcastIfSmall
     // variant would pay a SECOND corpus-scale pass over the chunk
     // table (re-derive or cache it — both corpus-sized). The window
     // formulation needs neither the hint nor the second pass, so the
@@ -2889,11 +2872,11 @@ object Dedup {
     // 100 TB shape: the component label table is bounded by the pair
     // GRAPH (docs in no near-dup pair never enter it) — dimension-
     // like here, a corpus FRACTION at realistic 30-50% web dup rates
-    // — so both small sides go through softDedupWeights' measured
-    // gatedBroadcast: under the gate, sizes broadcast onto labels and
+    // — so both small sides go through softDedupWeights'
+    // broadcastIfSmall: when they fit, sizes broadcast onto labels and
     // the labeled members broadcast onto the corpus (one LEFT
-    // broadcast join; the corpus-sized side never shuffles); over it,
-    // plain doc_id equi-joins under AQE. The report is one
+    // broadcast join; the corpus-sized side never shuffles);
+    // otherwise plain doc_id equi-joins under AQE. The report is one
     // source-keyed aggregation. In production the pairs come from the
     // q145 store (mined once); the oracle replays exactly that
     // contract.
@@ -2951,12 +2934,11 @@ object Dedup {
     // 100 TB shape: the label/pair tables are bounded by the pair
     // graph — dimension-like at this corpus's dup rate, a corpus
     // FRACTION at realistic web rates — so every one of them goes
-    // through the measured gatedBroadcast: under the gate, unit
-    // assignment is one broadcast LEFT join onto the corpus (the
-    // corpus never shuffles for it) and the guarantee check
-    // broadcasts the pair list onto the labeled corpus twice (the
-    // q87 membership shape); over the gate they fall back to plain
-    // id-keyed equi-joins under AQE. The mix64 split rule is a
+    // through broadcastIfSmall: when they fit, unit assignment is one
+    // broadcast LEFT join onto the corpus (the corpus never shuffles
+    // for it) and the guarantee check broadcasts the pair list onto
+    // the labeled corpus twice (the q87 membership shape); otherwise
+    // they fall back to plain id-keyed equi-joins under AQE. The mix64 split rule is a
     // per-row expression; the census is one bounded (split, source)
     // aggregation; the one-row guarantee count stays force-broadcast.
     // Pairs come from one mining pass (the q145 store in production),
@@ -2972,9 +2954,9 @@ object Dedup {
         val u = TextAnalysis.unsignedDec(
           call_function("graft_mix64", col("unit")))
         val lab = docs
-          // comp is already localCheckpoint-ed inside CC → measure it
+          // comp is already localCheckpoint-ed inside CC → count it
           // in place, don't re-materialize
-          .join(gatedBroadcast(comp, materialize = false),
+          .join(broadcastIfSmall(comp, comp.count()),
             col("doc_id") === col("id"), "left")
           .select(col("doc_id"), col("source"),
             coalesce(col("lbl"), col("doc_id")).as("unit"))
@@ -2985,24 +2967,23 @@ object Dedup {
               .otherwise("test"))
           .localCheckpoint() // census + check
         val sa = lab.select(col("doc_id"), col("split"))
-        // ONE measurement gates BOTH leak-check joins (r13): |leak| ≤
+        // ONE count sizes BOTH leak-check joins (r13): |leak| ≤
         // |pairs| exactly (sa is unique per doc_id, so each pair row
         // matches ≤ 1 sa row), and pairs is already localCheckpoint-ed
-        // — its count is a cheap block scan. The old shape ran a
-        // second gatedBroadcast(leak) that MATERIALIZED the corpus-
-        // side join (localCheckpoint job + count job) just to measure
-        // it; the surrogate bound removes both jobs and keeps the
-        // leak subtree in the consumer plan (the q73/contaminationFlags
-        // upper-bound-gate precedent). Conservative above the gate:
+        // — its count is a cheap block scan. The old shape checkpointed
+        // and counted the corpus-side leak join (localCheckpoint job +
+        // count job) just to size it; the surrogate bound removes both
+        // jobs and keeps the leak subtree in the consumer plan (the
+        // q73/contaminationFlags upper-bound precedent). Conservative:
         // an oversize bound falls back to the plain equi-join even if
         // the true leak list is small — the at-scale-safe direction.
         val nPairs = pairs.count()
         val leak = sa
-          .join(gatedBroadcastAt(pairs, nPairs),
+          .join(broadcastIfSmall(pairs, nPairs),
             col("doc_id") === col("doc_a"))
           .select(col("split").as("split_a"), col("doc_b"))
         val nLeaks = sa
-          .join(gatedBroadcastAt(leak, nPairs),
+          .join(broadcastIfSmall(leak, nPairs),
             col("doc_id") === col("doc_b"))
           .filter(col("split") =!= col("split_a"))
           .agg(count(lit(1)).as("n_cross_pairs"))
@@ -3054,7 +3035,7 @@ object Dedup {
     // oracle replays both from the q145 store).
     //
     // 100 TB shape: q151's — one corpus scan, the membership join
-    // through softDedupWeights' measured broadcast gate, a
+    // through softDedupWeights' broadcastIfSmall, a
     // |sources|-row census. The ppm-token sum accumulates in
     // DECIMAL(38,0) (nt·wppm is ~1e10 per doc; an int64 sum wraps
     // past ~1e6 average-sized docs per source — DECIMAL carries the
@@ -3158,18 +3139,19 @@ object Dedup {
     // both classes costs, in the q155 convention.
     //
     // 100 TB shape: the eval shingle set is tiny BY CONSTRUCTION (an
-    // eval benchmark, not a corpus) — it rides the measured
-    // gatedBroadcast, so the train corpus is probed by one broadcast
-    // LEFT join and never shuffles for it; the per-doc containment
-    // aggregate is map-side combinable (a doc's shingles are
-    // co-located after explode). Every graph-side table (seeds,
-    // contaminated labels, reached members, the direct list) is
-    // eval- or pair-graph-bounded and joins through the same gate —
-    // measured-small sides broadcast onto the corpus, oversize sides
-    // fall back to doc_id equi-joins under AQE. The shingled corpus
-    // projection is localCheckpoint-ed because three branches consume
-    // it ACROSS the gate's measuring actions (a plain frame would
-    // re-shingle the corpus in each of them). The oracle replays the
+    // eval benchmark, not a corpus) — when it fits a broadcast
+    // (broadcastIfSmall's rule) the train corpus probes it as one
+    // sorted array row and never shuffles for it; otherwise the
+    // per-doc containment aggregate is map-side combinable (a doc's
+    // shingles are co-located after explode). Every graph-side table
+    // (seeds, contaminated labels, reached members, the direct list)
+    // is eval- or pair-graph-bounded and joins through
+    // broadcastIfSmall — measured-small sides broadcast onto the
+    // corpus, oversize sides fall back to doc_id equi-joins under AQE.
+    // The shingled corpus projection is localCheckpoint-ed because
+    // three branches consume it ACROSS the counts that size those
+    // broadcasts (a plain frame would re-shingle the corpus in each
+    // of them). The oracle replays the
     // graph side from the q145
     // store (the q152 pattern) and the n-gram side with q48's exact
     // hash64 replay.

@@ -159,15 +159,15 @@ object Multimodal {
 
   /** q158's census over a (media_id, kind, b0..b3) signature frame
     * (the [[phashBands]] output, localCheckpoint-ed or persisted by
-    * the caller — two consumers sit across the broadcast gate's
-    * measuring counts). Exact-hash grouping first, banded near-join
+    * the caller — two consumers sit across the counts that size the
+    * broadcasts). Exact-hash grouping first, banded near-join
     * over the DISTINCT signature set only (pigeonhole: hamming ≤ 3 ⇒
     * ≥ 1 identical 16-bit band, so the candidate set provably
     * contains every pair under the radius — less the documented
     * [[PhashMaxBucket]] hot-band trade), bit_count verify,
     * connectedComponents over the verified sig graph, and the
-    * cluster-map back-join through the measured broadcast gate — the
-    * media table never shuffles for it.
+    * cluster-map back-join through [[Dedup.broadcastIfSmall]] — the
+    * media table never shuffles for it while the map fits.
     */
   private[graft] def phashClusters(sigs: DataFrame,
       maxBucket: Int = PhashMaxBucket): DataFrame = {
@@ -205,13 +205,15 @@ object Multimodal {
       .select(col("sid_a").as("doc_a"), col("sid_b").as("doc_b"))
     val comp = Dedup.connectedComponents(vp)
     val cm = ds
-      // comp is already localCheckpoint-ed inside CC → measure in
-      // place; cm itself is distinct-sig-bounded → measured gate
-      .join(Dedup.gatedBroadcast(comp, materialize = false),
+      // comp is already localCheckpoint-ed inside CC → count in
+      // place; cm itself is distinct-sig-bounded → checkpoint + count
+      .join(Dedup.broadcastIfSmall(comp, comp.count()),
         col("sid") === col("id"), "left")
       .select(col("b0"), col("b1"), col("b2"), col("b3"), col("sid"),
         coalesce(col("lbl"), col("sid")).as("cl"))
-    sigs.join(Dedup.gatedBroadcast(cm), Seq("b0", "b1", "b2", "b3"))
+      .localCheckpoint()
+    sigs.join(Dedup.broadcastIfSmall(cm, cm.count()),
+        Seq("b0", "b1", "b2", "b3"))
       .groupBy(col("cl"))
       .agg(min(col("media_id")).as("cluster_rep"),
         count(lit(1)).as("n_media"),
@@ -428,19 +430,20 @@ object Multimodal {
     // is what a production ingest writes as a column (the q145-store
     // pattern) — here localCheckpoint stands in for that asset; the
     // band self-join and CC run on DISTINCT signatures (dimension-
-    // like vs the corpus); the cluster map joins back through the
-    // measured broadcast gate, so the media table never shuffles for
-    // it. Sig ids are graft_hash64 of the band tuple — collisions are
-    // negligible and BOTH engines replay the same hash, so parity is
-    // deterministic; cluster identity is exposed via min(media_id),
-    // never the label value (signed-vs-unsigned min order differs
-    // across engines; grouping is order-agnostic).
+    // like vs the corpus); the cluster map joins back through
+    // Dedup.broadcastIfSmall, so the media table never shuffles for
+    // it while the map fits. Sig ids are graft_hash64 of the band
+    // tuple — collisions are negligible and BOTH engines replay the
+    // same hash, so parity is deterministic; cluster identity is
+    // exposed via min(media_id), never the label value (signed-vs-
+    // unsigned min order differs across engines; grouping is
+    // order-agnostic).
     QueryDef("q158_media_phash_dedup",
       (s, dir) => {
         ensureMediaDump(s)
         // production: a persisted ingest-time column; here: one slim
-        // checkpoint (two consumers sit across the gate's measuring
-        // counts — the q152 pairs rationale)
+        // checkpoint (two consumers sit across the counts that size
+        // the broadcasts — the q152 pairs rationale)
         phashClusters(phashBands(mediaTable(s)).localCheckpoint())
       },
       Some(s"""WITH RECURSIVE $mediaCte,

@@ -82,19 +82,59 @@ class FinalCutSpec extends AnyFunSuite {
     assert(ppm >= 999997L && ppm <= 1000003L, s"ppm=$ppm")
   }
 
+  /** `body` under `spark.sql.autoBroadcastJoinThreshold = -1`, the
+    * one switch that forces every over-threshold shape (no
+    * broadcastIfSmall hint, no planner broadcast); restored after.
+    */
+  private def withoutBroadcast[T](body: => T): T = {
+    val old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try body finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+  }
+
+  private def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
   test("q156/q157: both probe/gate shapes produce identical results (r12)") {
-    // gate = 0 forces the OVER-gate shapes everywhere: the explode +
-    // plain equi-join contamination probe (instead of the sorted-
-    // overlap merge against the one-row eval array) and un-hinted
-    // equi-joins at every gatedBroadcastAt site. Results must be
-    // byte-identical to the default (under-gate, broadcast) shapes —
-    // the r12 probe rewrite is a plan change only.
-    def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.collect().map(_.toString).sorted.toSeq
-    assert(canon(Dedup.finalCutManifestFrom(corpus)) ==
-      canon(Dedup.finalCutManifestFrom(corpus, gate = 0L)))
-    assert(canon(Dedup.dupAwareDecontaminationFrom(corpus)) ==
-      canon(Dedup.dupAwareDecontaminationFrom(corpus, gate = 0L)))
+    // threshold -1 forces the over-threshold shapes everywhere: the
+    // explode + plain equi-join contamination probe (instead of the
+    // sorted-overlap merge against the one-row eval array) and
+    // un-hinted equi-joins at every broadcastIfSmall site. Results
+    // must be byte-identical to the default (broadcast) shapes — the
+    // r12 probe rewrite is a plan change only. The corpus's null-text
+    // and 1-token docs ride both shapes.
+    val fcDefault = canon(Dedup.finalCutManifestFrom(corpus))
+    val ddDefault = canon(Dedup.dupAwareDecontaminationFrom(corpus))
+    withoutBroadcast {
+      assert(fcDefault == canon(Dedup.finalCutManifestFrom(corpus)))
+      assert(ddDefault == canon(Dedup.dupAwareDecontaminationFrom(corpus)))
+    }
+  }
+
+  test("q157/q158: threshold -1 leaves no broadcast join in the consumer plans") {
+    // A broadcast() hint overrides -1, so a size rule that hints
+    // without reading the threshold would still plan these joins as
+    // broadcasts. Under -1 every graph-side join must be a shuffle
+    // join, with rows equal to the default run.
+    def run(df: org.apache.spark.sql.DataFrame): (String, Seq[String]) = {
+      val rows = canon(df)
+      (df.queryExecution.executedPlan.toString, rows)
+    }
+    val (fcPlan, fcRows) = run(Dedup.finalCutManifestFrom(corpus))
+    val (pcPlan, pcRows) = run(Multimodal.phashClusters(phashSigs))
+    assert(fcPlan.contains("BroadcastHashJoin"), fcPlan.take(2000))
+    assert(pcPlan.contains("BroadcastHashJoin"), pcPlan.take(2000))
+    withoutBroadcast {
+      val (fcOff, fcOffRows) = run(Dedup.finalCutManifestFrom(corpus))
+      val (pcOff, pcOffRows) = run(Multimodal.phashClusters(phashSigs))
+      for (p <- Seq(fcOff, pcOff)) {
+        assert(!p.contains("BroadcastHashJoin"), p.take(2000))
+        assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"),
+          p.take(2000))
+      }
+      assert(fcOffRows == fcRows)
+      assert(pcOffRows == pcRows)
+    }
   }
 
   // ── q158 ────────────────────────────────────────────────────────
@@ -117,9 +157,9 @@ class FinalCutSpec extends AnyFunSuite {
     assert(sigs(2L) == ((1, 0, 0, 0x8000)), sigs.toString)
   }
 
-  test("phashClusters: merges through hamming ≤ 3, rejects hamming 4") {
+  private def phashSigs = {
     import spark.implicits._
-    val sigs = Seq(
+    Seq(
       // chain: 1↔3 ham 1, 3↔4 ham 2, 1↔4 ham 3 → one cluster {1,2,3,4}
       (1L, "image", 1, 0, 0, 0),
       (2L, "image", 1, 0, 0, 0), // exact sig dup of 1
@@ -130,7 +170,10 @@ class FinalCutSpec extends AnyFunSuite {
       (5L, "video", 0xFF00, 0xFF00, 0xFF00, 0xFF00),
       (6L, "video", 0xFF0F, 0xFF00, 0xFF00, 0xFF00)
     ).toDF("media_id", "kind", "b0", "b1", "b2", "b3")
-    val out = Multimodal.phashClusters(sigs).collect()
+  }
+
+  test("phashClusters: merges through hamming ≤ 3, rejects hamming 4") {
+    val out = Multimodal.phashClusters(phashSigs).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(out.toSeq == Seq(
       (1L, 4L, 3L, 2L),  // rep 1: media {1,2,3,4}, sigs {1,3,F}, kinds {image,audio}

@@ -172,28 +172,28 @@ class PairsStoreSpec extends AnyFunSuite {
     // The at-scale contract (round-10 verdict task 3): membership/
     // label tables are pair-graph-bounded — dimension-LIKE at benign
     // dup rates, a corpus FRACTION at realistic web rates — so the
-    // broadcast is a measured decision, not an assumption. Both plan
-    // shapes must produce identical weights.
+    // broadcast is a measured decision (Dedup.broadcastIfSmall), not
+    // an assumption. Both plan shapes must produce identical weights.
     val docs = corpus.select(col("doc_id"))
     val pairs = Dedup.minePairs(corpus).select(col("doc_a"), col("doc_b"))
-    def run(gate: Long): (String, Map[Long, Long]) = {
-      val w = Dedup.softDedupWeights(docs, pairs, broadcastGate = gate)
+    def run(): (String, Map[Long, Long]) = {
+      val w = Dedup.softDedupWeights(docs, pairs)
       (w.queryExecution.sparkPlan.toString,
         w.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
     }
-    val (pUnder, wUnder) = run(Dedup.BroadcastRowGate)
+    val (pUnder, wUnder) = run()
     assert(pUnder.contains("BroadcastHashJoin"), pUnder.take(800))
     assert(!pUnder.contains("SortMergeJoin") &&
       !pUnder.contains("ShuffledHashJoin"),
       s"under the gate the corpus side must never shuffle:\n${pUnder.take(800)}")
-    // gate = 0 rows: no hint may be attached; with the planner's own
-    // auto-broadcast disabled (as a corpus-fraction table's size stats
-    // would disable it at 100 TB) the join MUST fall to a shuffle —
+    // threshold -1 forces the shape a corpus-fraction table takes at
+    // 100 TB: no hint may be attached and the planner's own
+    // auto-broadcast is off, so the join MUST fall to a shuffle —
     // proving no hidden hint survives to force a driver-side collect
     val old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val (pOver, wOver) = run(0L)
+      val (pOver, wOver) = run()
       assert(!pOver.contains("BroadcastHashJoin"),
         s"above the gate nothing may broadcast:\n${pOver.take(800)}")
       assert(pOver.contains("SortMergeJoin") ||

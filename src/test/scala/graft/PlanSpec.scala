@@ -1099,13 +1099,13 @@ class PlanSpec extends AnyFunSuite {
           .filter(_.analyzed.output.exists(_.name == "split"))
           .map(_.sparkPlan)).mkString("\n")
         // the label/size/pair tables are bounded by the pair GRAPH and
-        // at this SF the measured gatedBroadcast admits every one of
-        // them — they must be the broadcast build side; the
-        // corpus-sized scan must never shuffle for a join (CC
-        // internals are behind the localCheckpoint truncation, so the
-        // query plan is exactly the consumer shape). Above the gate
-        // the same code degrades to plain equi-joins —
-        // PairsStoreSpec pins that shape.
+        // at this SF Dedup.broadcastIfSmall admits every one of them —
+        // they must be the broadcast build side; the corpus-sized scan
+        // must never shuffle for a join (CC internals are behind the
+        // localCheckpoint truncation, so the query plan is exactly the
+        // consumer shape). Under autoBroadcastJoinThreshold = -1 the
+        // same code degrades to plain equi-joins — PairsStoreSpec pins
+        // that shape.
         assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"),
           s"$q: corpus must meet the component tables via broadcast:\n" +
             p.take(1500))
@@ -1182,11 +1182,11 @@ class PlanSpec extends AnyFunSuite {
   test("q157: gate tables broadcast onto the quality aggregate; all hash-aggregated") {
     try {
       val p = plan("q157_final_cut_manifest")
-      // at test SF the measured gate admits every graph-side table —
-      // exactly three LeftOuter broadcast joins meet the corpus
-      // (direct, reached, comp); above the gate the same code
-      // degrades to plain equi-joins (PairsStoreSpec's both-shapes
-      // contract for the shared gatedBroadcast)
+      // at test SF Dedup.broadcastIfSmall admits every graph-side
+      // table — exactly three LeftOuter broadcast joins meet the
+      // corpus (direct, reached, comp); under threshold -1 the same
+      // code degrades to plain equi-joins (FinalCutSpec pins that
+      // shape)
       assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"),
         p.take(1500))
       assert("BroadcastHashJoin .*LeftOuter".r.findAllIn(p).size == 3,
