@@ -114,7 +114,7 @@ object Dev {
 
       case "scale" =>
         def time(name: String)(mk: => DataFrame): Unit = measure(name, passes = 2)(mk)
-        plans.GraftFunctions.ensure(spark)
+        plans.GraftExtensions.install(spark)
         for (k <- Seq(1, 4, 16)) {
           val d = (0 until k).map { i =>
             docs.select((col("doc_id") + lit(i * 1000000000L)).as("doc_id"),

@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 /** Vector math over `array<float>` embedding columns, backed by the
   * native Catalyst expressions in graft.plans (fused codegen loops —
   * see VectorExpressions.scala; callers must have run
-  * GraftFunctions.ensure on the session, which Tables.embeddings does).
+  * GraftExtensions.install on the session, which SparkEntry does before
+  * every query).
   *
   * Float-vs-double note: elements are cast to double BEFORE the fold and
   * accumulated strictly left-to-right — the same order and precision an

@@ -288,7 +288,7 @@ object Dedup {
     */
   private[graft] def minhashSigs(docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    graft.plans.GraftFunctions.ensure(docs.sparkSession)
+    graft.plans.GraftExtensions.install(docs.sparkSession)
     // fused single-pass kernel (r13, tripleSigs' rationale); simK = 0
     // skips the simhash vote these callers never read
     docs.select(col("doc_id"),
@@ -416,9 +416,8 @@ object Dedup {
     */
   private[graft] def tripleSigs(docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    // self-sufficient for library callers that never touched Tables
-    // (which registers the graft_* codegen expressions on read)
-    graft.plans.GraftFunctions.ensure(docs.sparkSession)
+    // self-sufficient for library callers that bypass SparkEntry
+    graft.plans.GraftExtensions.install(docs.sparkSession)
     // ONE fused per-row pass (r13): the previous three kernel calls
     // each re-tokenized text and the two SHINGLE_K families each
     // rebuilt+rehashed the same shingle set; graft_sig_pack computes
@@ -967,7 +966,7 @@ object Dedup {
     */
   private def fusedSigShingleDocs(docsIn: org.apache.spark.sql.DataFrame)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    graft.plans.GraftFunctions.ensure(docsIn.sparkSession)
+    graft.plans.GraftExtensions.install(docsIn.sparkSession)
     val fused = graft.plans.CacheLifecycle.materializeSpread(
       (d: org.apache.spark.sql.DataFrame) => d
         .select(col("doc_id"), col("source"),
@@ -1755,7 +1754,6 @@ object Dedup {
     // sides of that join are graph-bounded, never the corpus).
     QueryDef("q73_dedup_keepers",
       (s, dir) => {
-        graft.plans.TopK.ensure(s)
         // quality = the stored n_chars column, NOT length(text): the
         // scoring branch then scans only (doc_id, n_chars) — the text
         // column never leaves the parquet reader for this branch (the
@@ -3058,7 +3056,6 @@ object Dedup {
         // miners' historical input). Measured: q155 sat ~0.5 s above
         // its q151 superset-sibling per pass; the delta was exactly
         // this scan.
-        graft.plans.GraftFunctions.ensure(s)
         val fused = graft.plans.CacheLifecycle.materializeSpread(
           (d: org.apache.spark.sql.DataFrame) => d
             .select(col("doc_id"), col("source"),

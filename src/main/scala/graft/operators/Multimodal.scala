@@ -171,7 +171,7 @@ object Multimodal {
     */
   private[graft] def phashClusters(sigs: DataFrame,
       maxBucket: Int = PhashMaxBucket): DataFrame = {
-    graft.plans.GraftFunctions.ensure(sigs.sparkSession)
+    graft.plans.GraftExtensions.install(sigs.sparkSession)
     val sidCol = call_function("graft_hash64",
       concat_ws("-", col("b0").cast("string"), col("b1").cast("string"),
         col("b2").cast("string"), col("b3").cast("string")))

@@ -1384,7 +1384,6 @@ object Relational {
     // broadcast into the final projection.
     QueryDef("q129_join_size_sketch",
       (s, dir) => {
-        graft.plans.GraftFunctions.ensure(s)
         val depth = 4; val width = 2048
         val cms = udaf(graft.functions.CmsSketchAgg(depth, width))
         val ipUdf = udf { (a: Seq[Long], b: Seq[Long]) =>

@@ -237,7 +237,7 @@ object Similarity {
     */
   private[graft] def semanticDedup(emb: org.apache.spark.sql.DataFrame,
       thresh: Long): org.apache.spark.sql.DataFrame = {
-    graft.plans.GraftFunctions.ensure(emb.sparkSession)
+    graft.plans.GraftExtensions.install(emb.sparkSession)
     val q = KMeans.quantized(emb, "vec_id", "embedding")
       .localCheckpoint()
     val seeds = q.filter(col("id") < 8)
@@ -674,7 +674,6 @@ object Similarity {
     // sort of the corpus.
     QueryDef("q80_label_outliers",
       (s, dir) => {
-        graft.plans.TopK.ensure(s)
         def qv = Tables.embeddings(s, dir)
           .select(col("vec_id"), col("label"),
             posexplode(col("embedding")).as(Seq("dim", "v")))
@@ -791,7 +790,6 @@ object Similarity {
     // no per-label sort, bounded heaps on both exchange sides.
     QueryDef("q88_label_confusion",
       (s, dir) => {
-        graft.plans.TopK.ensure(s)
         val cent = Tables.embeddings(s, dir)
           .select(col("label"), posexplode(col("embedding")).as(Seq("dim", "v")))
           .select(col("label"), col("dim"),
@@ -1033,7 +1031,6 @@ object Similarity {
     // alongside is the audit's ground truth, deliberately paid.
     QueryDef("q104_pq_adc",
       (s, dir) => {
-        graft.plans.TopK.ensure(s) // both top-10s use the rewrite
         val half = DIM / 2
         val q = KMeans.quantized(Tables.embeddings(s, dir),
             "vec_id", "embedding")
@@ -1187,7 +1184,6 @@ object Similarity {
     // four ways, never re-scored.
     QueryDef("q107_ivf_probe_curve",
       (s, dir) => {
-        graft.plans.TopK.ensure(s)
         val e = Tables.embeddings(s, dir)
         val cosQ = cosQueryCol
         val scored = e.select(col("vec_id"), col("label"),
@@ -1304,7 +1300,6 @@ object Similarity {
     // left-to-right — so both engines rank identical doubles.
     QueryDef("q120_trunc_recall",
       (s, dir) => {
-        graft.plans.TopK.ensure(s)
         val e = Tables.embeddings(s, dir)
         def scoreAt(d: Int): Column = {
           val q = queryVec.take(d)
@@ -1397,7 +1392,6 @@ object Similarity {
     // is identical at any partitioning in both engines.
     QueryDef("q121_knn_hubness",
       (s, dir) => {
-        graft.plans.TopK.ensure(s)
         // Pair distances via the expansion d² = |a|² + |b|² − 2·a·b
         // with the fused graft_dot codegen loop — NOT the interpreted
         // zip_with/aggregate fold (measured 4.0 → 0.6 s at sf0.1 over
@@ -1477,7 +1471,6 @@ object Similarity {
     // a report row, not a missing one).
     QueryDef("q130_lsh_radius_sweep",
       (s, dir) => {
-        graft.plans.TopK.ensure(s)
         val nPlanes = 64
         val bucket = VectorKernels.lshBucket(col("embedding"), DIM, nPlanes)
         val qBucket = VectorKernels.bucketOf(queryVec.toArray, nPlanes)
@@ -1647,7 +1640,6 @@ object Similarity {
     // the bounded TopKPerKey heap.
     QueryDef("q138_ivfpq_recall",
       (s, dir) => {
-        graft.plans.TopK.ensure(s)
         val half = DIM / 2
         val q = KMeans.quantized(Tables.embeddings(s, dir),
             "vec_id", "embedding")

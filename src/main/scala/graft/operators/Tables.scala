@@ -40,19 +40,8 @@ object Tables {
     }
     raw.withColumn("ts", ts)
   }
-  /** Installs graft_* (the text-hash expressions ride the documents
-    * pipelines) — see [[embeddings]].
-    */
-  def documents(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.ensure(s)
+  def documents(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/documents.parquet")
-  }
-  /** Also installs the graft_* native expressions into the session —
-    * the driver hands us its own SparkSession (no
-    * spark.sql.extensions), so vector operators self-register here.
-    */
-  def embeddings(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.ensure(s)
+  def embeddings(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/embeddings.parquet")
-  }
 }

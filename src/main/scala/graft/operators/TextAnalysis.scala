@@ -924,7 +924,6 @@ object TextAnalysis {
     // carries ≤ k rows per (source, partition), no per-group sort.
     QueryDef("q66_distinctive_terms",
       (s, dir) => {
-        graft.plans.TopK.ensure(s)
         import org.apache.spark.sql.expressions.Window
         val st = Tables.documents(s, dir)
           .select(col("source"), toks.as("t"))
@@ -1634,7 +1633,6 @@ object TextAnalysis {
     QueryDef("q94_top_tokens_ties",
       (s, dir) => {
         import org.apache.spark.sql.expressions.Window
-        graft.plans.TopK.ensure(s)
         Tables.documents(s, dir)
           .select(col("source"), explode(toks).as("tok"))
           .groupBy(col("source"), col("tok"))
@@ -1679,7 +1677,6 @@ object TextAnalysis {
     // long wrap ≡ the oracle's HUGEINT residues).
     QueryDef("q100_train_manifest",
       (s, dir) => {
-        graft.plans.TopK.ensure(s)
         import org.apache.spark.sql.expressions.Window
         val inst = upsamplePlan(s, dir)
           .select(col("doc_id"), col("source"),
@@ -2339,7 +2336,6 @@ object TextAnalysis {
     QueryDef("q115_source_jaccard_sketch",
       (s, dir) => {
         import org.apache.spark.sql.expressions.Window
-        graft.plans.TopK.ensure(s)
         val k = 256
         // Trigram identity is 64-BIT-HASH identity from the first
         // projection on (round 8, the q124 8-byte-key lesson): every

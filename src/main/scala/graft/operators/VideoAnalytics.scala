@@ -240,7 +240,6 @@ object VideoAnalytics {
     // no FP comparison ambiguity).
     QueryDef("q72_argmax_ties",
       (s, dir) => {
-        graft.plans.TopK.ensure(s)
         val w = Window.partitionBy(col("stream_id"), col("object_class"))
           .orderBy(col("confidence").desc)
         detections(s, dir)
@@ -275,7 +274,6 @@ object VideoAnalytics {
     // tiebreak column.
     QueryDef("q91_rank_topk_ties",
       (s, dir) => {
-        graft.plans.TopK.ensure(s)
         val w = Window.partitionBy(col("stream_id"), col("object_class"))
           .orderBy(col("confidence").desc)
         detections(s, dir)
@@ -382,7 +380,6 @@ object VideoAnalytics {
     // register maxima are idempotent under duplicates).
     QueryDef("q27_approx_distinct",
       (s, dir) => {
-        graft.plans.GraftFunctions.ensure(s)
         val dec38 = org.apache.spark.sql.types.DataTypes
           .createDecimalType(38, 0)
         val d = detections(s, dir)

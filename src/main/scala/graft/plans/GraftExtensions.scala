@@ -1,30 +1,39 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Engine extension point. Two installation paths:
+/** The one install path for the engine's session-wide pieces: the
+  * graft_* SQL functions ([[GraftFunctions.descriptors]], so
+  * `SELECT graft_dot(a.embedding, b.embedding)` and `call_function`
+  * resolve) and the TopKPerKey planner pair ([[TopKStrategy]] +
+  * [[TopKRewriteRule]]).
   *
-  *  1. `spark.sql.extensions=graft.plans.GraftExtensions` at session
-  *     build time (the canonical SparkSessionExtensions route);
-  *  2. [[GraftFunctions.ensure]] on an already-built session (the
-  *     driver contract hands us its own SparkSession, so the vector
-  *     operators self-register idempotently at query-construction
-  *     time).
+  * An install on a built session, not `spark.sql.extensions`: callers
+  * of [[graft.SparkEntry]] hand it their own, already-built
+  * SparkSession. SparkEntry runs the install before every query body,
+  * so a query plans the same alone as after any other query in its
+  * session. Library entry points that callers reach without SparkEntry
+  * (TopK.perKey, IncrementalDedup, the dedup signature helpers) call it
+  * themselves.
   *
-  * Both register the same SQL-callable native expressions, so
-  * `SELECT graft_dot(a.embedding, b.embedding)` works alongside the
-  * Column API.
+  * Idempotent, and synchronized: concurrent query construction must
+  * not lose a check-then-append to the session's `experimental` lists.
+  * Re-registering a function is a no-op (same info, same builder).
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
+object GraftExtensions {
+  def install(spark: SparkSession): Unit = synchronized {
+    val reg = spark.sessionState.functionRegistry
     GraftFunctions.descriptors.foreach { case (ident, info, builder) =>
-      ext.injectFunction((ident, info, builder))
+      reg.registerFunction(ident, info, builder)
     }
-    ext.injectPlannerStrategy(_ => TopKStrategy)
-    ext.injectOptimizerRule(_ => TopKRewriteRule)
+    val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .experimental
+    if (!exp.extraStrategies.contains(TopKStrategy))
+      exp.extraStrategies = exp.extraStrategies :+ TopKStrategy
+    if (!exp.extraOptimizations.contains(TopKRewriteRule))
+      exp.extraOptimizations = exp.extraOptimizations :+ TopKRewriteRule
   }
 }
 
@@ -108,14 +117,4 @@ object GraftFunctions {
         litInt(args(2), "graft_sig_pack"),
         litInt(args(3), "graft_sig_pack"),
         litInt(args(4), "graft_sig_pack"))))
-
-  /** Idempotent session-local registration (overwrites are no-ops —
-    * the builders are stateless).
-    */
-  def ensure(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    descriptors.foreach { case (ident, info, builder) =>
-      reg.registerFunction(ident, info, builder)
-    }
-  }
 }

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, Descending, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateOrdering
@@ -27,11 +27,11 @@ import org.apache.spark.sql.types.IntegerType
   *    k distinct order-value classes, whole classes kept
   *    (output-bounded state); rank = class index 1..k.
   */
-sealed trait TopKRankMode { def keepsTies: Boolean }
+sealed trait TopKRankMode
 object TopKRankMode {
-  case object RowNum extends TopKRankMode { val keepsTies = false }
-  case object RankTies extends TopKRankMode { val keepsTies = true }
-  case object DenseRankTies extends TopKRankMode { val keepsTies = true }
+  case object RowNum extends TopKRankMode
+  case object RankTies extends TopKRankMode
+  case object DenseRankTies extends TopKRankMode
 }
 
 /** Whole-operator custom plan: top-k rows per key under an ordering,
@@ -64,10 +64,10 @@ object TopKRankMode {
   * decreases.
   *
   * The full custom-operator ladder is exercised: logical UnaryNode →
-  * Strategy (injected via SparkSessionExtensions or
-  * spark.experimental.extraStrategies) → partial+final physical execs
-  * with a required ClusteredDistribution that EnsureRequirements
-  * satisfies with a single hash exchange.
+  * Strategy (appended to spark.experimental.extraStrategies by
+  * [[GraftExtensions.install]]) → partial+final physical execs with a
+  * required ClusteredDistribution that EnsureRequirements satisfies
+  * with a single hash exchange.
   */
 case class TopKPerKeyNode(
     keys: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
@@ -78,9 +78,6 @@ case class TopKPerKeyNode(
     mode: TopKRankMode = TopKRankMode.RowNum) extends UnaryNode {
 
   require(k >= 1, s"TopKPerKeyNode requires k >= 1, got $k")
-
-  /** Back-compat view: does this node keep whole tie groups? */
-  def keepTies: Boolean = mode.keepsTies
 
   override def output: Seq[Attribute] = child.output :+ rankAttr
 
@@ -434,19 +431,6 @@ object TopKStrategy extends org.apache.spark.sql.execution.SparkStrategy {
 /** Column-API entry point. */
 object TopK {
 
-  /** Ensures the strategy is installed on the session (idempotent and
-    * synchronized — concurrent query construction must not lose a
-    * check-then-append; complements the GraftExtensions route).
-    */
-  def ensure(spark: SparkSession): Unit = synchronized {
-    val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .experimental
-    if (!exp.extraStrategies.contains(TopKStrategy))
-      exp.extraStrategies = exp.extraStrategies :+ TopKStrategy
-    if (!exp.extraOptimizations.contains(TopKRewriteRule))
-      exp.extraOptimizations = exp.extraOptimizations :+ TopKRewriteRule
-  }
-
   /** Top `k` rows per `keyCols` group under `orderSpec`
     * ((column, ascending) pairs; ties broken by later columns), with a
     * rank column `rn` appended — `mode` selects which ranking
@@ -458,7 +442,7 @@ object TopK {
       mode: TopKRankMode = TopKRankMode.RowNum): DataFrame = {
     require(k >= 1, s"TopK.perKey requires k >= 1, got $k")
     val spark = df.sparkSession
-    ensure(spark)
+    GraftExtensions.install(spark)
     val analyzed = df.queryExecution.analyzed
     def attr(n: String): Attribute = analyzed.output
       .find(_.name == n)

@@ -92,7 +92,7 @@ object IncrementalDedup {
           }
           c => countingUdf(c)
         case None =>
-          graft.plans.GraftFunctions.ensure(spark)
+          graft.plans.GraftExtensions.install(spark)
           c => call_function("graft_simhash", coalesce(c, lit("")), lit(2))
       }
 

@@ -7,8 +7,10 @@ import org.apache.spark.sql.{DataFrame, ForeachWriter, Row}
   * client-side and posted in labeled payloads —
   *
   *   - a buffer seals at `bufferSize` bytes (128 KB);
-  *   - sealed buffers post when `bufferCount` (2) are pending, when
-  *     `flushIntervalMs` (5000) elapses, or at close;
+  *   - sealed buffers post when `bufferCount` (2) are pending, or at
+  *     close (a [[StreamLoadSink.Buffer]] lives for one partition ×
+  *     micro-batch, so the reference's flush interval never fires
+  *     before close and has no counterpart here);
   *   - each post carries a unique label and is retried up to
   *     `maxRetries` (3) times — the server dedupes replays BY LABEL,
   *     which is what makes the at-least-once client exactly-once
@@ -33,7 +35,6 @@ object StreamLoadSink {
       labelPrefix: String = "graft_video",
       bufferSize: Int = 128 * 1024,
       bufferCount: Int = 2,
-      flushIntervalMs: Long = 5000L,
       maxRetries: Int = 3,
       props: Map[String, String] = Map(
         "format" -> "json",
@@ -133,16 +134,13 @@ object StreamLoadSink {
   }
 
   /** Client-side buffering + labeled retry, the per-subtask state
-    * machine of the reference sink. Pure and clock-free: callers pass
-    * time into [[tick]] so the flush-interval behavior is testable
-    * without sleeping.
+    * machine of the reference sink.
     */
   final class Buffer(cfg: StreamLoadConfig, transport: Transport,
       labelScope: String) {
     private val current = new java.io.ByteArrayOutputStream()
     private val pending = scala.collection.mutable.Queue.empty[Array[Byte]]
     private var seq = 0L
-    private var lastFlushMs = Long.MinValue
     private var attemptsTotal = 0L
 
     /** Attempts across all posts (observability; spec asserts retry counts). */
@@ -154,18 +152,6 @@ object StreamLoadSink {
       current.write(bytes)
       if (current.size() >= cfg.bufferSize) seal()
       if (pending.size >= cfg.bufferCount) flush()
-    }
-
-    /** Flush-interval behavior (BufferFlushIntervalMs): posts whatever
-      * is buffered once `flushIntervalMs` has elapsed since the last
-      * flush. The first tick only arms the timer.
-      */
-    def tick(nowMs: Long): Unit = {
-      if (lastFlushMs == Long.MinValue) lastFlushMs = nowMs
-      else if (nowMs - lastFlushMs >= cfg.flushIntervalMs) {
-        flush()
-        lastFlushMs = nowMs
-      }
     }
 
     /** Seal the open buffer and post everything pending. */

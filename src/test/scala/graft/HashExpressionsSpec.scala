@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.TextKernels
-import graft.plans.GraftFunctions
+import graft.plans.GraftExtensions
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -29,7 +29,7 @@ class HashExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("graft_hash64 equals TextKernels.hash64, codegen on and off") {
     import spark.implicits._
-    GraftFunctions.ensure(spark)
+    GraftExtensions.install(spark)
     for (mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
       spark.conf.set("spark.sql.codegen.factoryMode", mode)
       val got = samples.toDF("s")
@@ -43,7 +43,7 @@ class HashExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("graft_mix64 equals TextKernels.mix64, codegen on and off") {
     import spark.implicits._
-    GraftFunctions.ensure(spark)
+    GraftExtensions.install(spark)
     val longs = Seq(0L, 1L, -1L, Long.MinValue, Long.MaxValue,
       1125899906842597L) ++ (1 to 50).map(i => TextKernels.mix64(i.toLong))
     for (mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
@@ -59,7 +59,7 @@ class HashExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("graft_sorted_overlap equals thresholded array_intersect, codegen on and off") {
     import spark.implicits._
-    GraftFunctions.ensure(spark)
+    GraftExtensions.install(spark)
     val rnd = new scala.util.Random(46)
     // sorted distinct long arrays with controlled overlap, plus edges:
     // empty sides, identical arrays, disjoint ranges, single element
@@ -96,7 +96,7 @@ class HashExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("graft_sorted_overlap: gallop path (asymmetric sides) equals the merge, codegen on and off") {
     import spark.implicits._
-    GraftFunctions.ensure(spark)
+    GraftExtensions.install(spark)
     val rnd = new scala.util.Random(157)
     // sides on BOTH flanks of the GallopRatio threshold, in both
     // orders (small-vs-big and big-vs-small), overlap at the big
@@ -131,7 +131,7 @@ class HashExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("graft_sorted_overlap: req=0 always reports the exact overlap") {
     import spark.implicits._
-    GraftFunctions.ensure(spark)
+    GraftExtensions.install(spark)
     val got = Seq((Seq(1L, 3L, 9L), Seq(2L, 3L, 9L, 11L)))
       .toDF("a", "b")
       .select(expr("graft_sorted_overlap(a, b, 0)"),
@@ -142,7 +142,7 @@ class HashExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("null propagates; SQL-callable after ensure()") {
-    GraftFunctions.ensure(spark)
+    GraftExtensions.install(spark)
     val rows = spark.sql(
       """SELECT graft_hash64(CAST(NULL AS STRING)) AS h,
         |       graft_mix64(graft_hash64('abc')) AS m""".stripMargin)
@@ -153,7 +153,7 @@ class HashExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("graft_shingle_hashes equals sorted hash64 of TextKernels.shingles, codegen on and off") {
     import spark.implicits._
-    GraftFunctions.ensure(spark)
+    GraftExtensions.install(spark)
     val texts = Seq("", "one", "one two", "one two three",
       "one two three four five six", "a  b\t c   d", "dup dup dup dup",
       "the quick brown fox jumps over the lazy dog", "x " * 200)
@@ -181,7 +181,7 @@ class HashExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("graft_shingle_hashes_pos: positional, duplicates kept, set view matches graft_shingle_hashes") {
     import spark.implicits._
-    GraftFunctions.ensure(spark)
+    GraftExtensions.install(spark)
     val texts = Seq("", "one", "one two", "one two three",
       "one two three four five six", "a  b\t c   d", "dup dup dup dup",
       "the quick brown fox jumps over the lazy dog", "x " * 200)
@@ -214,7 +214,7 @@ class HashExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("graft_minhash_bands / graft_simhash / graft_fingerprint match TextKernels, codegen on and off") {
     import spark.implicits._
-    GraftFunctions.ensure(spark)
+    GraftExtensions.install(spark)
     val texts = Seq("", "one", "one two three", "dup dup dup dup",
       "the quick brown fox jumps over the lazy dog",
       "a  b\t c   d", "x " * 150)
@@ -252,7 +252,7 @@ class HashExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("graft_sig_pack equals the three separate kernels, codegen on and off") {
     import spark.implicits._
-    GraftFunctions.ensure(spark)
+    GraftExtensions.install(spark)
     // the fused kernel feeds every multi-signal miner (r13): its three
     // outputs must be BIT-IDENTICAL to the separate expressions it
     // replaced, including the degenerate shapes (empty text → the

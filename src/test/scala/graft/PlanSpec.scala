@@ -98,6 +98,27 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("TopKPerKey"), p.take(1500))
   }
 
+  test("q51/q105 plan TopKPerKey in a fresh session, as in a full run") {
+    // SparkEntry installs the rewrite before every query body, so a
+    // query's plan does not depend on which query ran before it
+    for (q <- Seq("q51_knn_pairs", "q105_retention_cohorts")) {
+      val p = SparkEntry.queries(q)(spark.newSession(), sf)
+        .queryExecution.sparkPlan.toString
+      assert(p.contains("TopKPerKey"), s"$q: ${p.take(1500)}")
+    }
+  }
+
+  test("install is idempotent: one strategy, one rule, functions resolve") {
+    val s = spark.newSession()
+    graft.plans.GraftExtensions.install(s)
+    graft.plans.GraftExtensions.install(s)
+    val exp = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .experimental
+    assert(exp.extraStrategies.count(_ == graft.plans.TopKStrategy) == 1)
+    assert(exp.extraOptimizations.count(_ == graft.plans.TopKRewriteRule) == 1)
+    assert(s.sql("SELECT graft_mix64(CAST(7 AS BIGINT)) AS m").collect().length == 1)
+  }
+
   test("q73: keeper election through TopKPerKey; keepers join broadcasts") {
     val q = SparkEntry.queries("q73_dedup_keepers")(spark, sf)
     try {
@@ -115,7 +136,8 @@ class PlanSpec extends AnyFunSuite {
     val opt = SparkEntry.queries("q72_argmax_ties")(spark, sf)
       .queryExecution.optimizedPlan
     assert(opt.exists {
-      case n: graft.plans.TopKPerKeyNode => n.keepTies && n.k == 1
+      case n: graft.plans.TopKPerKeyNode =>
+        n.mode == graft.plans.TopKRankMode.RankTies && n.k == 1
       case _ => false
     }, opt.toString.take(1500))
     assert(!opt.exists(

@@ -331,7 +331,7 @@ class QueriesSpec extends AnyFunSuite {
 
   test("q103 CDC chunks are shift-invariant past the first boundary") {
     import spark.implicits._
-    graft.plans.GraftFunctions.ensure(spark)
+    graft.plans.GraftExtensions.install(spark)
     // a long synthetic doc, then the same content with 7 junk tokens
     // prepended: every original chunk except chunk 0 must reappear
     // with an IDENTICAL (sig, n_anchors) — boundaries are content
@@ -356,7 +356,7 @@ class QueriesSpec extends AnyFunSuite {
 
   test("q103 verbatim copies dedup chunk-for-chunk") {
     import spark.implicits._
-    graft.plans.GraftFunctions.ensure(spark)
+    graft.plans.GraftExtensions.install(spark)
     val text = (0 until 300).map(i => s"b${i % 29}c${(i * 11) % 31}")
       .mkString(" ")
     val docs = (0 until 200).map(i => (i.toLong, "z", text))

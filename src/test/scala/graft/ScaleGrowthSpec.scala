@@ -32,7 +32,7 @@ class ScaleGrowthSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private def ensureFns(): Unit = graft.plans.GraftFunctions.ensure(spark)
+  private def ensureFns(): Unit = graft.plans.GraftExtensions.install(spark)
 
   private lazy val base: DataFrame = spark.read
     .parquet("/root/testdata/sf0.001/documents.parquet")

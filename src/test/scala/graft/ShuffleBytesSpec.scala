@@ -72,7 +72,6 @@ class ShuffleBytesSpec extends AnyFunSuite {
   }
 
   test("TopKPerKey shuffles less than an uncapped window top-k") {
-    graft.plans.TopK.ensure(spark)
     val rows = spark.read.parquet(s"$sf/lineitem.parquet")
       .select(col("l_returnflag"), col("l_orderkey"), col("l_extendedprice"))
     val topk = shuffleBytes(
@@ -109,7 +108,7 @@ class ShuffleBytesSpec extends AnyFunSuite {
   }
 
   test("q76 df-window shuffles less than the groupBy+self-join formulation") {
-    graft.plans.GraftFunctions.ensure(spark)
+    graft.plans.GraftExtensions.install(spark)
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     // At 100 TB the df table (distinct 5-grams) is NOT broadcastable —
     // disable auto-broadcast so the measured baseline is the at-scale
@@ -136,7 +135,7 @@ class ShuffleBytesSpec extends AnyFunSuite {
   }
 
   test("q124 hashed gram keys shuffle less than string gram keys") {
-    graft.plans.GraftFunctions.ensure(spark)
+    graft.plans.GraftExtensions.install(spark)
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     // the q124 trigram fan-out (widest gram — the clearest contrast)
     def fan = docs.select(col("source"), split(col("text"), " ").as("t"))
@@ -165,7 +164,7 @@ class ShuffleBytesSpec extends AnyFunSuite {
   }
 
   test("q83 windowed self-join (reused exchange) shuffles less than posting lists") {
-    graft.plans.GraftFunctions.ensure(spark)
+    graft.plans.GraftExtensions.install(spark)
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"), col("text"))
     // at 100 TB neither side of the anchor self-join broadcasts;
@@ -215,7 +214,6 @@ class ShuffleBytesSpec extends AnyFunSuite {
   }
 
   test("q80 centroid broadcast shuffles less than the shuffled-join twin") {
-    graft.plans.TopK.ensure(spark)
     val broad = shuffleBytes(
       SparkEntry.queries("q80_label_outliers")(spark, sf))
     // the twin without the broadcast hint, auto-broadcast disabled:

@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Stream-Load sink contract (ref sink/DorisSinkBuilder.java:62-95):
-  * 128 KB buffer seal, 2-buffer post trigger, 5 s flush interval,
+  * 128 KB buffer seal, 2-buffer post trigger, flush at close,
   * ≤3 retries, and label-scoped replay idempotence.
   */
 class StreamLoadSpec extends AnyFunSuite {
@@ -46,18 +46,6 @@ class StreamLoadSpec extends AnyFunSuite {
     buf.add("abcdefghij") // seals buffer 2 → bufferCount hit → post both
     assert(tr.loads.keySet == Set("t_0_0_0", "t_0_0_1"))
     assert(new String(tr.loads("t_0_0_0"), "UTF-8") == "0123456789\n")
-  }
-
-  test("flush interval posts a partial buffer; first tick only arms") {
-    val tr = new RecordingTransport()
-    val buf = new Buffer(cfg, tr, "0_0")
-    buf.add("one line")
-    buf.tick(1000L) // arms the timer
-    assert(tr.loads.isEmpty)
-    buf.tick(5999L) // 4999 ms elapsed < 5000
-    assert(tr.loads.isEmpty)
-    buf.tick(6000L) // 5000 ms elapsed → flush
-    assert(tr.loads.keySet == Set("t_0_0_0"))
   }
 
   test("post retries up to maxRetries then succeeds; counts attempts") {

@@ -34,7 +34,6 @@ class StreamingTopKSpec extends AnyFunSuite {
   /** Batch truth through the custom operator itself. */
   private def batchTopK(rows: Seq[Det], k: Int): Set[(String, Int, Long, Long)] = {
     import spark.implicits._
-    graft.plans.TopK.ensure(spark)
     graft.plans.TopK.perKey(
         rows.toDF("streamId", "confidence", "frameId", "detId"),
         Seq("streamId"),

@@ -1,6 +1,6 @@
 package graft
 
-import graft.plans.TopK
+import graft.plans.{GraftExtensions, TopK}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -81,7 +81,7 @@ class TopKPerKeySpec extends AnyFunSuite {
   }
 
   test("optimizer rule rewrites row_number<=k window filters into TopKPerKey") {
-    TopK.ensure(spark)
+    GraftExtensions.install(spark)
     val df = data
     val w = Window.partitionBy(col("k"))
       .orderBy(col("score").desc, col("id"))
@@ -108,7 +108,7 @@ class TopKPerKeySpec extends AnyFunSuite {
   }
 
   test("rewrite leaves rn = 1 queries correct (argmax shape)") {
-    TopK.ensure(spark)
+    GraftExtensions.install(spark)
     val df = data
     val w = Window.partitionBy(col("k")).orderBy(col("score").desc, col("id"))
     val q = df.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
@@ -120,7 +120,7 @@ class TopKPerKeySpec extends AnyFunSuite {
   }
 
   test("rank() = 1 rewrites into keep-ties TopKPerKey and keeps ALL tied rows") {
-    TopK.ensure(spark)
+    GraftExtensions.install(spark)
     val df = data
     // order by score ONLY → the top of most keys is a tie group;
     // rank() = 1 must keep every tied row (row_number would pick one)
@@ -149,7 +149,7 @@ class TopKPerKeySpec extends AnyFunSuite {
   }
 
   test("dense_rank() = 1 rewrites identically (same tie-group semantics at 1)") {
-    TopK.ensure(spark)
+    GraftExtensions.install(spark)
     val df = data
     val w = Window.partitionBy(col("k")).orderBy(col("score").desc)
     val q = df.withColumn("rn", dense_rank().over(w)).filter(col("rn") <= 1)
@@ -167,7 +167,7 @@ class TopKPerKeySpec extends AnyFunSuite {
 
   test("keep-ties with null keys and null order values (desc = NULLS LAST)") {
     import spark.implicits._
-    TopK.ensure(spark)
+    GraftExtensions.install(spark)
     // all-null group b: every row ties at rank 1 (null == null under
     // the ordering); group a: nulls sort last so only the 3.0 pair
     // survives; null KEY is its own group like any window partition
@@ -191,7 +191,7 @@ class TopKPerKeySpec extends AnyFunSuite {
 
   test("keep-ties equals driver-computed tie groups across seeded random datasets") {
     import spark.implicits._
-    TopK.ensure(spark)
+    GraftExtensions.install(spark)
     // small score domain + null injection → heavy tie groups, nulls in
     // and out of the winning position; ids are unique so the sets
     // compare exactly
@@ -236,7 +236,7 @@ class TopKPerKeySpec extends AnyFunSuite {
     }.sortBy(_.toString()).toSeq
 
   test("rank() <= k for k > 1 rewrites into RankTies mode: boundary tie group kept, rank gaps exact") {
-    TopK.ensure(spark)
+    GraftExtensions.install(spark)
     val df = data
     val w = Window.partitionBy(col("k")).orderBy(col("score").desc)
     val q = df.withColumn("rn", rank().over(w)).filter(col("rn") <= 3)
@@ -257,7 +257,7 @@ class TopKPerKeySpec extends AnyFunSuite {
   }
 
   test("dense_rank() <= k for k > 1 rewrites into DenseRankTies mode: top k value classes") {
-    TopK.ensure(spark)
+    GraftExtensions.install(spark)
     val df = data
     val w = Window.partitionBy(col("k")).orderBy(col("score").desc)
     val q = df.withColumn("rn", dense_rank().over(w)).filter(col("rn") <= 2)
@@ -280,7 +280,7 @@ class TopKPerKeySpec extends AnyFunSuite {
 
   test("rank() <= k survives the sort fallback with exact rank numbering") {
     import spark.implicits._
-    TopK.ensure(spark)
+    GraftExtensions.install(spark)
     // 2,000 distinct keys vs a 50-key bound → external-sort path on
     // both execs; 7 score values per key → multi-row tie groups around
     // the k = 3 boundary
@@ -302,7 +302,7 @@ class TopKPerKeySpec extends AnyFunSuite {
 
   test("keep-ties survives the sort fallback (key cardinality above the map bound)") {
     import spark.implicits._
-    TopK.ensure(spark)
+    GraftExtensions.install(spark)
     // 2,000 distinct keys vs a 50-key bound → both execs overflow into
     // the external-sort path; scores collapse to 7 values so every
     // key's top is a multi-row tie group

@@ -1,6 +1,6 @@
 package graft
 
-import graft.plans.{DotProduct, GraftFunctions, L2Norm}
+import graft.plans.{DotProduct, GraftExtensions, L2Norm}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -23,7 +23,7 @@ class VectorExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def mkDf = {
     import spark.implicits._
-    GraftFunctions.ensure(spark)
+    GraftExtensions.install(spark)
     Seq(
       (1L, Array(1.0f, 2.0f, 3.0f), Array(4.0f, 5.0f, 6.0f)),
       (2L, Array(0.5f, -1.5f, 2.25f), Array(-2.0f, 0.0f, 8.0f)),
@@ -51,7 +51,7 @@ class VectorExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val a = Array(1.5f, -2.25f, 3.0f)
     val b = Array(0.5f, 4.0f, -1.0f)
     import spark.implicits._
-    GraftFunctions.ensure(spark)
+    GraftExtensions.install(spark)
     val row = Seq((a, b)).toDF("a", "b")
       .select(call_function("graft_dot", col("a"), col("b")) /
         (call_function("graft_norm", col("a")) *
@@ -69,7 +69,7 @@ class VectorExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("SQL-callable after ensure(); mixed float/double operands work") {
-    GraftFunctions.ensure(spark)
+    GraftExtensions.install(spark)
     mkDf.createOrReplaceTempView("vecs")
     val rows = spark.sql(
       """SELECT id, graft_dot(a, array(1.0d, 1.0d, 1.0d)) AS s,
@@ -81,7 +81,7 @@ class VectorExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("null array yields null; length mismatch uses min length") {
     import spark.implicits._
-    GraftFunctions.ensure(spark)
+    GraftExtensions.install(spark)
     val df = Seq(
       (1L, Some(Array(1.0f, 2.0f)), Some(Array(3.0f))),
       (2L, None: Option[Array[Float]], Some(Array(1.0f)))
@@ -107,7 +107,7 @@ class VectorExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("graft_lsh_bucket matches VectorKernels.bucketOf, codegen on and off") {
     import graft.functions.VectorKernels
     import spark.implicits._
-    GraftFunctions.ensure(spark)
+    GraftExtensions.install(spark)
     val rnd = new scala.util.Random(53)
     val vecs: Seq[Seq[Float]] = (0 until 20).map(_ =>
       Seq.fill(64)((rnd.nextDouble() * 2 - 1).toFloat))
