@@ -2,7 +2,6 @@ package graft
 import graft.operators.Dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Dev tool, outside the Bench/Verify output contract. Runs in the
@@ -26,13 +25,8 @@ import org.apache.spark.sql.functions._
   *     multiSignalPairs+CC and prefixCandidates on 1×/4×/16× disjoint
   *     replicas of the corpus (ScaleGrowthSpec's pattern: replica i
   *     shifts doc_ids and prefixes tokens, so replicas never collide and
-  *     candidate growth stays linear), and PartitionedPrefix.cumulative
-  *     against a single-partition window on 1M/8M-row histograms. sf0.1
-  *     is overhead-dominated; scaling claims need the data to be the cost.
-  *     The prefix sums depend on the thread count: the two-pass rewrite
-  *     broke even near 8M rows at local[32] (5.60 vs 2.87 s), but on
-  *     local[4] it lost at both sizes (1M: 2.39 vs 1.81 s; 8M: 10.98 vs
-  *     10.20 s) — state the session's cores with any number it prints.
+  *     candidate growth stays linear). sf0.1 is overhead-dominated;
+  *     scaling claims need the data to be the cost.
   */
 object Dev {
   private val Usage = "usage: graft.Dev meter|dump <sfDir> <outDir> [q1,q2|all]" +
@@ -126,15 +120,6 @@ object Dev {
             Dedup.connectedComponents(Dedup.multiSignalPairsFrom(d)))
           time(s"x$k prefixCands")(Dedup.prefixCandidates(
             plans.CacheLifecycle.materializeSpread(Dedup.sortedShingleHashes)(d)))
-        }
-        for (n <- Seq(1000000L, 8000000L)) {
-          def hist: DataFrame = spark.range(n)
-            .select(col("id").as("v"), (pmod(col("id"), lit(97L)) + 1).as("c"))
-            .repartition(spark.sparkContext.defaultParallelism)
-          time(s"hist$n cumsum single-partition")(
-            hist.withColumn("cum", sum(col("c")).over(Window.orderBy(col("v")))))
-          time(s"hist$n cumsum two-pass")(plans.PartitionedPrefix.cumulative(
-            hist, "v", sums = Seq("c" -> "cum")))
         }
     } finally spark.sparkContext.removeSparkListener(counters)
   }

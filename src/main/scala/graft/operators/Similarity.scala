@@ -1195,7 +1195,7 @@ object Similarity {
         // logs the WindowExec warning that flags corpus-scaled frames)
         val ranks = ivfCellScores(e, queryVec)
           .withColumn("prank", row_number().over(Window
-            .partitionBy(graft.plans.PartitionedPrefix.onePart(col("sc")))
+            .partitionBy(graft.plans.SinglePartition.onePart(col("sc")))
             .orderBy(col("sc").desc, col("label").cast("string"))))
         val probes = ranks
           .select(col("label"), col("prank"),

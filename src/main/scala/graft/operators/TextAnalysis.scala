@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.plans.SinglePartition.onePart
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators over the `documents` table — the
@@ -1007,7 +1008,7 @@ object TextAnalysis {
         val vocab = top
           .withColumn("id",
             (row_number().over(
-              Window.partitionBy(graft.plans.PartitionedPrefix.onePart(col("c")))
+              Window.partitionBy(onePart(col("c")))
                 .orderBy(col("c").desc, col("tok"))) - 1).cast("long"))
           .select(col("tok"), col("id"))
         pt.join(broadcast(vocab), Seq("tok"), "left")
@@ -1138,20 +1139,22 @@ object TextAnalysis {
     // buffer/sort the full 100 TB on one path.
     QueryDef("q79_curriculum_bins",
       (s, dir) => {
+        import org.apache.spark.sql.expressions.Window
         val docs = Tables.documents(s, dir)
           .select(col("doc_id"), col("n_chars"))
         val hist = docs.groupBy(col("n_chars").as("v"))
           .agg(count(lit(1)).as("c"))
-        // r13: the cumulative distribution runs as a range-bucketed
-        // two-pass prefix sum (PartitionedPrefix) — the old
-        // Window.orderBy(v) moved the whole distinct-value histogram
-        // to ONE task, a serial bottleneck once the value domain
-        // grows with the corpus. hist ends in its own aggregation
-        // exchange, which AQE stage reuse computes once for the
-        // total/partials/window consumers — no cache needed.
+        // the cumulative distribution is one running sum over the
+        // distinct-n_chars histogram — a value domain, not a corpus
+        // (523 values over 5,000 docs at sf0.1) — so one explicit
+        // partition (onePart) is the plan. hist ends in its own
+        // aggregation exchange, which AQE stage reuse computes once
+        // for the total and the window.
         val total = hist.agg(sum(col("c")).as("total"))
-        val bounds = graft.plans.PartitionedPrefix
-          .cumulative(hist, "v", sums = Seq("c" -> "cum"))
+        val bounds = hist
+          .withColumn("cum", sum(col("c")).over(
+            Window.partitionBy(onePart(col("v"))).orderBy(col("v"))
+              .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
           .crossJoin(broadcast(total))
           .agg(
             min(when(col("cum") * 4 >= col("total"), col("v"))).as("b25"),
@@ -1194,6 +1197,7 @@ object TextAnalysis {
     // the S-row rollup; the cumulative window runs over S rows.
     QueryDef("q81_novelty_curve",
       (s, dir) => {
+        import org.apache.spark.sql.expressions.Window
         val sh = Tables.documents(s, dir)
           .select(call_function("graft_mix64", col("doc_id"))
               .bitwiseAND(lit(7L)).as("shard"),
@@ -1203,14 +1207,14 @@ object TextAnalysis {
           .agg(min(col("shard")).as("first_shard"))
           .groupBy(col("first_shard"))
           .agg(count(lit(1)).as("n_new_ngrams"))
-        // r13: cumulative curve via the range-bucketed two-pass prefix
-        // sum (PartitionedPrefix) — no single-partition window; the
-        // S-row rollup ends in its own exchange, which AQE stage
-        // reuse shares across the partials/window consumers instead
-        // of re-running the corpus-wide shingle aggregation
-        graft.plans.PartitionedPrefix
-          .cumulative(agg, "first_shard",
-            sums = Seq("n_new_ngrams" -> "cum_ngrams"))
+        // the cumulative curve is one running sum over the S-row
+        // rollup (8 shards at any corpus size), so one explicit
+        // partition (onePart) is the plan
+        agg
+          .withColumn("cum_ngrams", sum(col("n_new_ngrams")).over(
+            Window.partitionBy(onePart(col("first_shard")))
+              .orderBy(col("first_shard"))
+              .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
           .orderBy(col("first_shard"))
       },
       Some(s"""WITH ${OracleSql.toksCte("documents", "doc_id")},
@@ -1294,13 +1298,15 @@ object TextAnalysis {
     // block-sized data and broadcasts.
     QueryDef("q85_coverage_curve",
       (s, dir) => {
-        // r13: both cumulative columns run as ONE range-bucketed
-        // two-pass prefix sum (PartitionedPrefix, desc by count) — no
-        // single-partition window; the block table ends in its own
-        // exchange, which AQE stage reuse computes once for the grand
-        // totals (previously a global window frame riding the same
-        // pass), the partials and the windowed frame — the corpus
-        // wordcount still runs exactly once
+        import org.apache.spark.sql.expressions.Window
+        // both cumulative columns are running sums (desc by count) in
+        // ONE window over the block table, whose rows are distinct
+        // count values (30 at sf0.1) — bounded by the count domain,
+        // not the vocabulary — and which broadcasts below anyway, so one
+        // explicit partition (onePart) is the plan. The block table
+        // ends in its own exchange, which AQE stage reuse computes
+        // once for the grand totals and the window — the corpus
+        // wordcount runs exactly once.
         val base = Tables.documents(s, dir)
           .select(toks.as("t")).select(explode(col("t")).as("tok"))
           .groupBy(col("tok")).agg(count(lit(1)).as("c"))
@@ -1309,9 +1315,11 @@ object TextAnalysis {
           .withColumn("occ", col("c") * col("n_toks"))
         val tot = base.agg(sum(col("n_toks")).as("nv"),
           sum(col("occ")).as("total"))
-        val blocks = graft.plans.PartitionedPrefix
-          .cumulative(base, "c", desc = true,
-            sums = Seq("n_toks" -> "cum_toks", "occ" -> "cum_occ"))
+        val w = Window.partitionBy(onePart(col("c"))).orderBy(col("c").desc)
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        val blocks = base
+          .withColumn("cum_toks", sum(col("n_toks")).over(w))
+          .withColumn("cum_occ", sum(col("occ")).over(w))
           .crossJoin(broadcast(tot))
         val vs = {
           import s.implicits._
@@ -1379,12 +1387,13 @@ object TextAnalysis {
           .agg(count(lit(1)).as("c"))
         val srcs = hist.groupBy(col("source"))
           .agg(sum(col("c")).as("n_s"))
-        // r13: the corpus CDF runs as a range-bucketed two-pass prefix
-        // sum (PartitionedPrefix) — no single-partition window over
-        // the distinct-length domain
-        val corp = graft.plans.PartitionedPrefix.cumulative(
-          hist.groupBy(col("v")).agg(sum(col("c")).as("cv")),
-          "v", sums = Seq("cv" -> "cum_c"))
+        // the corpus CDF is one running sum over the distinct-length
+        // domain (523 values at sf0.1), which broadcasts into the grid
+        // below anyway, so one explicit partition (onePart) is the plan
+        val corp = hist.groupBy(col("v")).agg(sum(col("c")).as("cv"))
+          .withColumn("cum_c", sum(col("cv")).over(
+            Window.partitionBy(onePart(col("v"))).orderBy(col("v"))
+              .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
         val tot = corp.agg(sum(col("cv")).as("n"))
         val grid = srcs.crossJoin(broadcast(corp.select(col("v"), col("cum_c"))))
           .join(broadcast(hist), Seq("source", "v"), "left")
@@ -2733,11 +2742,13 @@ object TextAnalysis {
           .agg(first(col("n")).as("n_docs"), first(col("w")).as("bin_w"),
             est(50).as("est_p50"), est(90).as("est_p90"))
         val vals = base.groupBy(col("nt")).agg(count(lit(1)).as("c"))
-        // r13: exact-quantile CDF as a range-bucketed two-pass prefix
-        // sum (PartitionedPrefix) — no single-partition window over
-        // the distinct-value domain
-        val cumv = graft.plans.PartitionedPrefix
-          .cumulative(vals, "nt", sums = Seq("c" -> "cumc"))
+        // the exact-quantile CDF is one running sum over the distinct
+        // token counts (91 at sf0.1) — a value domain, not the
+        // corpus — so one explicit partition (onePart) is the plan
+        val cumv = vals
+          .withColumn("cumc", sum(col("c")).over(
+            Window.partitionBy(onePart(col("nt"))).orderBy(col("nt"))
+              .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
           .crossJoin(broadcast(base.agg(count(lit(1)).as("n"))))
         def exactQ(q: Int) = min(when(col("cumc") * 100 >= col("n") * q,
           col("nt")))
@@ -2944,6 +2955,7 @@ object TextAnalysis {
     // frame; the corpus pays one groupBy + one broadcast join back.
     QueryDef("q137_quality_skyline",
       (s, dir) => {
+        import org.apache.spark.sql.expressions.Window
         val m = Tables.documents(s, dir)
           .filter(col("text").isNotNull)
           .select(col("doc_id"),
@@ -2951,11 +2963,14 @@ object TextAnalysis {
             col("n_chars").as("ch"))
           .localCheckpoint()
         val g = m.groupBy(col("nt")).agg(min(col("ch")).as("mn"))
-        // r13: the exclusive prefix-min over nt DESC runs as a
-        // range-bucketed two-pass prefix aggregate (PartitionedPrefix)
-        // — no single-partition window over the distinct-nt domain
-        val front = graft.plans.PartitionedPrefix
-          .cumulative(g, "nt", desc = true, minExcl = Seq("mn" -> "pm"))
+        // the exclusive prefix-min over nt DESC is one window over the
+        // distinct-token counts (26 at sf0.1), which broadcasts below
+        // anyway, so one explicit partition (onePart) is the plan;
+        // pm is null only for the first (highest-nt) row
+        val front = g
+          .withColumn("pm", min(col("mn")).over(
+            Window.partitionBy(onePart(col("nt"))).orderBy(col("nt").desc)
+              .rowsBetween(Window.unboundedPreceding, -1)))
         m.join(broadcast(front), Seq("nt"))
           .filter(col("ch") === col("mn") &&
             (col("pm").isNull || col("ch") < col("pm")))
@@ -3240,12 +3255,13 @@ object TextAnalysis {
           .withColumn("ns", count(lit(1)).over(
             Window.partitionBy(col("source"))))
         val nTot = m.agg(count(lit(1)).as("n_all"))
-        // r13: the global CDF runs as a range-bucketed two-pass prefix
-        // sum (PartitionedPrefix) — no single-partition window over
-        // the distinct-length domain
-        val cdf = graft.plans.PartitionedPrefix
-          .cumulative(m.groupBy(col("ch")).agg(count(lit(1)).as("cnt")),
-            "ch", sums = Seq("cnt" -> "cum"))
+        // the global CDF is one running sum over the distinct-length
+        // domain (523 values at sf0.1), which broadcasts below anyway,
+        // so one explicit partition (onePart) is the plan
+        val cdf = m.groupBy(col("ch")).agg(count(lit(1)).as("cnt"))
+          .withColumn("cum", sum(col("cnt")).over(
+            Window.partitionBy(onePart(col("ch"))).orderBy(col("ch"))
+              .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
           .select(col("ch").as("v"), (col("cum") - col("cnt")).as("lo"),
             col("cum").as("hi"))
         m.crossJoin(broadcast(nTot))

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, ForeachWriter, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 
 /** Stream-Load sink contract of the reference's Doris path
   * (sink/DorisSinkBuilder.java:62-95): JSON-lines rows are buffered
@@ -17,8 +17,9 @@ import org.apache.spark.sql.{DataFrame, ForeachWriter, Row}
   *     end-to-end.
   *
   * Spark mapping: the Flink sink lifecycle (open/invoke/close per
-  * subtask) becomes a [[ForeachWriter]] (open/process/close per
-  * partition × epoch). Labels are `<prefix>_<epoch>_<partition>_<seq>`
+  * subtask) becomes one [[StreamLoadSink.Buffer]] per partition ×
+  * micro-batch inside [[StreamLoadSink.writeBatch]], called from
+  * `foreachBatch`. Labels are `<prefix>_<epoch>_<partition>_<seq>`
   * — deterministic, so a replayed micro-batch or retried task
   * regenerates the SAME labels and the transport's label-dedupe
   * drops the duplicates. The reference seeds its prefix with
@@ -194,28 +195,13 @@ object StreamLoadSink {
     }
   }
 
-  /** ForeachWriter over a single string column of JSON lines (the
-    * output of VideoPipeline.dorisJsonLines). Use with
-    * `.writeStream.foreach(writer)` — epochId in [[open]] is the
-    * micro-batch id, so replays regenerate identical labels.
-    */
-  final class JsonLinesWriter(cfg: StreamLoadConfig, transport: Transport)
-      extends ForeachWriter[Row] {
-    @transient private var buf: Buffer = _
-    override def open(partitionId: Long, epochId: Long): Boolean = {
-      buf = new Buffer(cfg, transport, s"${epochId}_$partitionId")
-      true
-    }
-    override def process(value: Row): Unit = buf.add(value.getString(0))
-    override def close(errorOrNull: Throwable): Unit =
-      if (errorOrNull == null) buf.flush()
-    // on error the buffer is abandoned: the task retry re-opens with
-    // the same (epoch, partition) scope and replays the same labels
-  }
-
-  /** Batch-side convenience: push a one-column JSON-lines DataFrame
-    * through the same buffered/labeled path, one label scope per
-    * partition (batchId plays the epoch role).
+  /** Push a one-column JSON-lines DataFrame (the output of
+    * VideoPipeline.dorisJsonLines) through the buffered, labeled path,
+    * one label scope per partition. Streams call it from
+    * `.writeStream.foreachBatch` with the micro-batch id as `batchId`,
+    * so a replayed batch regenerates identical labels. A failed task
+    * abandons its buffer: the retry re-opens the same (batch,
+    * partition) scope and replays the same labels.
     */
   def writeBatch(df: DataFrame, batchId: Long, cfg: StreamLoadConfig,
       transport: Transport): Unit =

@@ -1,7 +1,10 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Expression, Literal, Pmod}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -25,6 +28,11 @@ class PlanSpec extends AnyFunSuite {
 
   private def plan(q: String): String =
     SparkEntry.queries(q)(spark, sf).queryExecution.sparkPlan.toString
+
+  /** Every WindowExec in `p`, through AQE wrappers and subqueries. */
+  private def windows(p: SparkPlan): Seq[WindowExec] =
+    AdaptivePlans.collectWithSubqueries(p) { case w: WindowExec => w }
+  private object AdaptivePlans extends AdaptiveSparkPlanHelper
 
   test("q02 star join: all three dims broadcast, no sort-merge join") {
     val p = plan("q02_revenue_by_nation")
@@ -377,22 +385,50 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q81: shard computed in-plan, min/count partial-aggregate; " +
-      "cumsum is the partitioned two-pass shape") {
+      "cumsum is one window on the onePart partition") {
     val exec = SparkEntry.queries("q81_novelty_curve")(spark, sf)
-      .queryExecution.executedPlan.toString
-    // shard labels and first-seen still need no join of the CORPUS —
-    // the only joins are PartitionedPrefix's broadcasts of the 1-row
-    // bounds and the ≤64-row bucket offsets (r13: the cumulative
-    // curve no longer runs a single-partition window)
-    assert(!exec.contains("SortMergeJoin") &&
-        !exec.contains("ShuffledHashJoin"),
-      s"only constant-size broadcast frames may join:\n${exec.take(2000)}")
-    assert(exec.contains("partial_min"),
-      s"first-seen min must combine map-side:\n${exec.take(2000)}")
-    assert("Window \\[sum".r.findFirstIn(exec).isDefined &&
-        exec.contains("windowspecdefinition(__b#"),
-      s"the cumsum window must partition by the range bucket:\n${
-        exec.take(2000)}")
+      .queryExecution.executedPlan
+    val text = exec.toString
+    // shard labels and first-seen need no join of the CORPUS
+    assert(!text.contains("SortMergeJoin") &&
+        !text.contains("ShuffledHashJoin"),
+      s"only constant-size broadcast frames may join:\n${text.take(2000)}")
+    assert(text.contains("partial_min"),
+      s"first-seen min must combine map-side:\n${text.take(2000)}")
+    // the window that outputs cum_ngrams partitions by onePart's
+    // pmod(…, 1), not by nothing (EliminateWindowPartitions strips a
+    // foldable key); the planner computes the key below the window as
+    // an alias (here in the rollup aggregate's output)
+    def aliased(k: Attribute, p: SparkPlan): Option[Expression] =
+      AdaptivePlans.flatMap(p)(_.expressions.flatMap(_.collect {
+        case a: Alias if a.exprId == k.exprId => a.child
+      })).headOption
+    assert(windows(exec).exists {
+        case WindowExec(we, Seq(k: Attribute), _, child)
+            if we.exists(_.name == "cum_ngrams") =>
+          aliased(k, child).exists {
+            case p: Pmod => p.right == Literal(1L)
+            case _       => false
+          }
+        case _ => false
+      },
+      s"the cumsum window must partition by onePart:\n${text.take(2000)}")
+  }
+
+  test("bounded-frame windows (seven running sums, q74, q107) all name a partition") {
+    // the plan-level form of "no WindowExec logs No Partition Defined":
+    // an empty partitionSpec moves the frame to one task unannounced;
+    // these frames take one partition on purpose, through onePart
+    for (q <- Seq("q74_vocab_encode", "q79_curriculum_bins",
+        "q81_novelty_curve", "q85_coverage_curve", "q86_length_drift",
+        "q107_ivf_probe_curve", "q128_hist_bin_sweep",
+        "q137_quality_skyline", "q148_quantile_normalize")) {
+      val ws = windows(SparkEntry.queries(q)(spark, sf)
+        .queryExecution.executedPlan)
+      assert(ws.nonEmpty, s"$q: expected a WindowExec")
+      assert(ws.forall(_.partitionSpec.nonEmpty),
+        s"$q: unpartitioned window:\n${ws.mkString("\n")}")
+    }
   }
 
   test("q82: joinless, windowless — two partial-aggregated groupBys only") {
@@ -547,15 +583,15 @@ class PlanSpec extends AnyFunSuite {
     val exec = SparkEntry.queries("q85_coverage_curve")(spark, sf)
       .queryExecution.executedPlan.toString
     try {
-      // r13: the block table is NOT cached — each of the exactly
-      // three corpus-consuming branches (grand totals, the prefix
-      // partials and the windowed cumsum frame) ends in the SAME
-      // canonical wordcount aggregation exchange, which AQE stage
-      // reuse computes once at runtime. Statically that shows as one
-      // "Scan parquet" line per branch; more lines would mean a new
-      // consumer crept in and the corpus pays another pass.
-      assert(exec.linesIterator.count(_.contains("Scan parquet")) <= 3,
-        s"totals, partials and the cumsum frame are the only corpus " +
+      // the block table is NOT cached — each of the exactly two
+      // corpus-consuming branches (grand totals and the windowed
+      // cumsum frame) ends in the SAME canonical wordcount
+      // aggregation exchange, which AQE stage reuse computes once at
+      // runtime. Statically that shows as one "Scan parquet" line per
+      // branch; more lines would mean a new consumer crept in and the
+      // corpus pays another pass.
+      assert(exec.linesIterator.count(_.contains("Scan parquet")) <= 2,
+        s"totals and the cumsum frame are the only corpus " +
           s"branches allowed:\n${exec.take(2500)}")
       assert(exec.contains("partial_count"),
         s"the wordcount must combine map-side:\n${exec.take(2500)}")

@@ -341,8 +341,6 @@ class ShuffleBytesSpec extends AnyFunSuite {
     // two frame_id re-exchanges for the self-join sides; the fold
     // pays ONE frame_id exchange of partial collect_sets and
     // enumerates pairs in-array (bounded by the 80-class vocabulary).
-    val det = SparkEntry.queries("q29_class_cooccurrence") // force registration
-    assert(det != null)
     val base = graft.operators.VideoAnalytics.detections(spark, sf)
       .filter(col("confidence") >= 0.5)
     val fc = base.select(col("frame_id"), col("object_class")).distinct()

@@ -3,7 +3,7 @@ package graft
 import graft.model._
 import graft.streaming.StreamLoadSink._
 import graft.streaming.{FrameGenerator, VideoPipeline}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -122,7 +122,7 @@ class StreamLoadSpec extends AnyFunSuite {
       "divergent loser must neither clobber nor merge")
   }
 
-  test("streaming e2e: dorisJsonLines through JsonLinesWriter, exactly once") {
+  test("streaming e2e: dorisJsonLines through foreachBatch + writeBatch, exactly once") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("slstream").toString
     val ckpt = java.nio.file.Files.createTempDirectory("slckpt").toString
@@ -134,7 +134,9 @@ class StreamLoadSpec extends AnyFunSuite {
         VideoPipeline.process(mem.toDS(), EngineConfig()))
       .writeStream
       .option("checkpointLocation", ckpt)
-      .foreach(new JsonLinesWriter(cfg, new FileTransport(dir)))
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        writeBatch(batch, batchId, cfg, new FileTransport(dir))
+      }
       .start()
     mem.addData(b1)
     q.processAllAvailable()
